@@ -101,21 +101,105 @@ object HmmSuffStats {
 /** Distributed Baum-Welch EM — the Spark-first reshape of the whole
   * reference repo (BaumWelchDriver.java:118-137 iteration loop).
   *
-  * Per iteration: broadcast(model) → per-partition accumulation of
-  * one mutable HmmSuffStats → `treeAggregate` (depth 2) → driver-side
-  * row-normalize → reference convergence test (||ΔA||_F + ||ΔB||_F
-  * < ε, BaumWelchUtils.java:238-266).
+  * Per iteration: broadcast(models) → per-partition accumulation of
+  * one mutable HmmSuffStats per chain → `treeAggregate` (depth 2) →
+  * driver-side row-normalize → reference convergence test (||ΔA||_F +
+  * ||ΔB||_F < ε, BaumWelchUtils.java:238-266).
+  *
+  * One job per iteration for all chains: every trainer — a single
+  * [[fit]], or the R seeded restarts of [[fitBest]] — runs through one
+  * loop that advances every still-active chain together. Each
+  * iteration makes one broadcast of the active chains' models and one
+  * pass over each cached sequence, feeding that sequence to every
+  * chain's statistics; a chain leaves the batch when it converges or
+  * reaches `maxIterations`. So R restarts × I iterations cost I jobs,
+  * not R·I, and no driver thread beyond the caller's. A failing
+  * E-step (an impossible observation) fails that one job, and with it
+  * the call — no sibling chain runs on afterwards. Determinism is
+  * untouched: each chain's statistics are exact fixed-point sums
+  * (independent of partitioning, scheduling and of which other chains
+  * share the pass), so every chain's trajectory is bitwise the one it
+  * would follow alone.
   *
   * Scale: ZERO shuffle of sequence data — each iteration moves only
-  * O(numPartitions · (K²+KM)) doubles to the driver through the tree.
-  * At 100 TB / 1000 executors this is one broadcast (≪1 MB) and one
-  * sub-second aggregate per iteration; the sequences themselves stay
-  * cached and partition-local. This is the same shape MLlib uses for
-  * GaussianMixture/LDA EM.
+  * O(numPartitions · R · (K²+KM)) longs to the driver through the
+  * tree. At 100 TB / 1000 executors this is one broadcast (≪1 MB) and
+  * one sub-second aggregate per iteration; the sequences themselves
+  * stay cached and partition-local. This is the same shape MLlib uses
+  * for GaussianMixture/LDA EM.
   */
 object BaumWelch {
 
   final case class FitResult(model: HmmModel, logLikPerIter: Array[Double], iterations: Int, converged: Boolean)
+
+  /** One chain's state between iterations. */
+  private final class Chain(var model: HmmModel) {
+    val logLiks = scala.collection.mutable.ArrayBuffer.empty[Double]
+    var iter = 0
+    var converged = false
+    def result: FitResult = FitResult(model, logLiks.toArray, iter, converged)
+  }
+
+  /** The EM loop: advance every active chain by one iteration per
+    * `treeAggregate` until each has converged or run `maxIterations`.
+    * `eStep` adds one sequence's statistics under a model;
+    * `afterIteration` sees each chain after its M-step (checkpoints).
+    */
+  private def run(
+      sequences: RDD[Array[Int]],
+      chains: Seq[Chain],
+      maxIterations: Int,
+      epsilon: Double,
+      eStep: (HmmModel, Array[Int], HmmSuffStats) => Unit,
+      pseudoCount: Double,
+      afterIteration: Chain => Unit = _ => ()): Seq[FitResult] = {
+    val sc = sequences.sparkContext
+    def active = chains.filter(c => c.iter < maxIterations && !c.converged)
+    var batch = active
+    while (batch.nonEmpty) {
+      val models = batch.map(_.model).toArray
+      val bc = sc.broadcast(models)
+      val stats =
+        try sequences.treeAggregate(models.map(m => new HmmSuffStats(m.numStates, m.numSymbols)))(
+          seqOp = (acc, seq) => {
+            val ms = bc.value
+            var c = 0
+            while (c < ms.length) { eStep(ms(c), seq, acc(c)); c += 1 }
+            acc
+          },
+          combOp = (x, y) => {
+            var c = 0
+            while (c < x.length) { x(c).merge(y(c)); c += 1 }
+            x
+          },
+          depth = 2)
+        finally bc.destroy()
+      batch.zip(stats).foreach { case (c, st) =>
+        c.logLiks += st.logLik
+        val next = mStep(st, c.model, pseudoCount)
+        c.converged = c.model.frobeniusDistance(next) < epsilon
+        c.model = next
+        c.iter += 1
+        afterIteration(c)
+      }
+      batch = active
+    }
+    chains.map(_.result)
+  }
+
+  /** One chain per init, trained together; results in init order. */
+  private[hmm] def fitRestarts(
+      sequences: RDD[Array[Int]],
+      inits: Seq[HmmModel],
+      maxIterations: Int,
+      epsilon: Double,
+      hard: Boolean,
+      pseudoCount: Double = 0.0): Seq[FitResult] =
+    run(sequences, inits.map(new Chain(_)), maxIterations, epsilon,
+      if (hard) HmmAlgorithms.accumulateViterbi else HmmAlgorithms.accumulate, pseudoCount)
+
+  private def randomInits(numStates: Int, numSymbols: Int, restarts: Int, seed: Long): Seq[HmmModel] =
+    (0 until restarts).map(r => HmmModel.random(numStates, numSymbols, seed + r))
 
   /** Latest COMPLETE `model-N` checkpoint under `dir`, if any — via
     * the Hadoop FileSystem API so checkpoint dirs work on any cluster
@@ -156,22 +240,18 @@ object BaumWelch {
       epsilon: Double = 1e-4,
       checkpointDir: Option[String] = None,
       resume: Boolean = false): FitResult = {
-    val sc = sequences.sparkContext
     lazy val spark = org.apache.spark.sql.SparkSession.builder().getOrCreate()
-    var model = init
-    val logLiks = scala.collection.mutable.ArrayBuffer.empty[Double]
-    var iter = 0
-    var converged = false
+    val chain = new Chain(init)
     if (resume) checkpointDir.flatMap(latestCheckpoint(spark, _)).foreach {
       case (ckptIter, ckptPath) =>
         val (m, lls, conv) = ModelIO.loadCheckpoint(spark, ckptPath)
-        model = m
-        logLiks ++= lls
-        iter = ckptIter
+        chain.model = m
+        chain.logLiks ++= lls
+        chain.iter = ckptIter
         // a run that had already converged resumes as converged —
         // without this, resume would take one extra EM step and
         // drift off the uninterrupted trajectory
-        converged = conv
+        chain.converged = conv
     }
     else checkpointDir.foreach { d =>
       // fresh run: clear stale model-N dirs from any previous run, or
@@ -179,35 +259,21 @@ object BaumWelch {
       // (worst case as a no-op when its iteration exceeds
       // maxIterations, returning the stale model as "trained")
       val path = new org.apache.hadoop.fs.Path(d)
-      val fs = path.getFileSystem(sc.hadoopConfiguration)
+      val fs = path.getFileSystem(sequences.sparkContext.hadoopConfiguration)
       if (fs.exists(path))
         fs.listStatus(path).filter(_.getPath.getName.startsWith("model-"))
           .foreach(s => fs.delete(s.getPath, true))
     }
-    while (iter < maxIterations && !converged) {
-      val bc = sc.broadcast(model)
-      val k = model.numStates
-      val m = model.numSymbols
-      val stats = sequences.treeAggregate(new HmmSuffStats(k, m))(
-        seqOp = (acc, seq) => { HmmAlgorithms.accumulate(bc.value, seq, acc); acc },
-        combOp = (x, y) => x.merge(y),
-        depth = 2)
-      bc.destroy()
-      logLiks += stats.logLik
-      val next = mStep(stats, model)
-      converged = model.frobeniusDistance(next) < epsilon
-      model = next
-      iter += 1
-      checkpointDir.foreach(d =>
-        ModelIO.save(spark, model, s"$d/model-$iter", logLiks.toSeq, converged))
-    }
-    FitResult(model, logLiks.toArray, iter, converged)
+    run(sequences, Seq(chain), maxIterations, epsilon, HmmAlgorithms.accumulate, 0.0,
+      afterIteration = c => checkpointDir.foreach(d =>
+        ModelIO.save(spark, c.model, s"$d/model-${c.iter}", c.logLiks.toSeq, c.converged))).head
   }
 
-  /** Multi-restart EM: run `fit` from `restarts` seeded random inits
-    * and keep the model with the best final log-likelihood — the
-    * standard guard against EM local optima. Input should be cached:
-    * each restart re-iterates the sequences.
+  /** Multi-restart EM: run `restarts` seeded random inits (seeds
+    * `seed + r`) and keep the model with the best final
+    * log-likelihood — the standard guard against EM local optima.
+    * The chains share each iteration's job; input should be cached.
+    * Ties keep the first restart.
     */
   def fitBest(
       sequences: RDD[Array[Int]],
@@ -217,40 +283,16 @@ object BaumWelch {
       seed: Long = 42L,
       maxIterations: Int = 20,
       epsilon: Double = 1e-4): FitResult =
-    concurrently(restarts) { r =>
-      fit(sequences, HmmModel.random(numStates, numSymbols, seed + r), maxIterations, epsilon)
-    }.maxBy(_.logLikPerIter.last)
-
-  /** Run the independent restart chains as concurrent driver threads
-    * (guide §2.6 "overlap independent jobs", r19): each chain is
-    * inherently sequential (iteration N+1 consumes N's model), but
-    * the chains share nothing, so the scheduler back-fills one
-    * chain's tiny per-iteration stage tails with the others' —
-    * wall-clock ≈ the slowest chain instead of the sum (measured
-    * ~1.9× on the 3-restart entries at sf0.1). Determinism is
-    * untouched: every chain's statistics are exact fixed-point sums
-    * (partitioning- and scheduling-independent), results come back
-    * indexed by restart, and maxBy keeps its first-max-in-restart-
-    * order tie-break. Concurrent first actions on the shared cached
-    * RDD are safe — the BlockManager computes each partition once and
-    * blocks the other readers.
-    */
-  private def concurrently(n: Int)(body: Int => FitResult): Seq[FitResult] = {
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(n)
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-    try Await.result(
-      Future.sequence((0 until n).map(r => Future(body(r)))),
-      scala.concurrent.duration.Duration.Inf)
-    finally pool.shutdown()
-  }
+    fitRestarts(sequences, randomInits(numStates, numSymbols, restarts, seed),
+      maxIterations, epsilon, hard = false).maxBy(_.logLikPerIter.last)
 
   /** Multi-restart Viterbi training: hard EM is even more prone to
     * local optima than soft EM (the hard assignment can collapse both
     * states onto the corpus-modal symbol from one bad init), so the
     * restart guard is the supported way to ask for a trained model
-    * rather than a trajectory. Same maxBy-final-objective selection as
-    * [[fitBest]]; input should be cached.
+    * rather than a trajectory. Same seeds and maxBy-final-objective
+    * selection as [[fitBest]], same one job per iteration for all
+    * chains; input should be cached.
     */
   def fitViterbiBest(
       sequences: RDD[Array[Int]],
@@ -261,10 +303,8 @@ object BaumWelch {
       maxIterations: Int = 20,
       epsilon: Double = 1e-4,
       pseudoCount: Double = 0.0): FitResult =
-    concurrently(restarts) { r =>
-      fitViterbi(sequences, HmmModel.random(numStates, numSymbols, seed + r),
-        maxIterations, epsilon, pseudoCount)
-    }.maxBy(_.logLikPerIter.last)
+    fitRestarts(sequences, randomInits(numStates, numSymbols, restarts, seed),
+      maxIterations, epsilon, hard = true, pseudoCount).maxBy(_.logLikPerIter.last)
 
   /** Viterbi training (hard EM) — Mahout `HmmTrainer.trainViterbi`,
     * the public companion of the reference's soft-EM trainer
@@ -277,40 +317,19 @@ object BaumWelch {
     * guard against states starved by the hard assignment) →
     * reference convergence test (||ΔA||_F + ||ΔB||_F < ε).
     *
-    * Scale: identical dataflow to [[fit]] — zero shuffle of sequence
-    * data, one sub-MB broadcast + one O(K²+KM) aggregate per
-    * iteration. Hard counts are integers, so the trained model is
-    * FP-deterministic across partitionings (asserted in the spec) —
-    * no rounding-for-stability needed downstream, unlike soft EM.
+    * Scale: identical dataflow to [[fit]] (the same loop) — zero
+    * shuffle of sequence data, one sub-MB broadcast + one O(K²+KM)
+    * aggregate per iteration. Hard counts are integers, so the trained
+    * model is FP-deterministic across partitionings (asserted in the
+    * spec) — no rounding-for-stability needed downstream.
     */
   def fitViterbi(
       sequences: RDD[Array[Int]],
       init: HmmModel,
       maxIterations: Int = 20,
       epsilon: Double = 1e-4,
-      pseudoCount: Double = 0.0): FitResult = {
-    val sc = sequences.sparkContext
-    var model = init
-    val logLiks = scala.collection.mutable.ArrayBuffer.empty[Double]
-    var iter = 0
-    var converged = false
-    while (iter < maxIterations && !converged) {
-      val bc = sc.broadcast(model)
-      val k = model.numStates
-      val m = model.numSymbols
-      val stats = sequences.treeAggregate(new HmmSuffStats(k, m))(
-        seqOp = (acc, seq) => { HmmAlgorithms.accumulateViterbi(bc.value, seq, acc); acc },
-        combOp = (x, y) => x.merge(y),
-        depth = 2)
-      bc.destroy()
-      logLiks += stats.logLik
-      val next = mStep(stats, model, pseudoCount)
-      converged = model.frobeniusDistance(next) < epsilon
-      model = next
-      iter += 1
-    }
-    FitResult(model, logLiks.toArray, iter, converged)
-  }
+      pseudoCount: Double = 0.0): FitResult =
+    fitRestarts(sequences, Seq(init), maxIterations, epsilon, hard = true, pseudoCount).head
 
   /** Row-normalize summed stripes (BaumWelchReducer.java:133-150),
     * optionally adding `pseudoCount` to every cell first (Viterbi

@@ -19,6 +19,13 @@ final case class HmmModel(
     stateNames: Option[IndexedSeq[String]] = None,
     symbolNames: Option[IndexedSeq[String]] = None) {
 
+  /** Flat kernel tables (see [[HmmTables]]), built once per model
+    * instance — on first kernel use, and again per deserialized copy on
+    * an executor (transient), never per sequence or per time step. The
+    * model's arrays are treated as immutable once a kernel has run.
+    */
+  @transient private[hmm] lazy val tables: HmmTables = new HmmTables(this)
+
   /** Hidden-state name (defaults to s0..s{K-1} when no map given). */
   def stateName(i: Int): String = stateNames.map(_(i)).getOrElse(s"s$i")
 

@@ -162,7 +162,9 @@ object HmmQueries {
 
   // -------------------------------------------------------------------
   // Model-driven per-sequence queries: broadcast model, one narrow map
-  // over sequences — zero extra shuffle beyond the sequence build.
+  // over sequences — zero extra shuffle beyond the sequence build. The
+  // kernels read the broadcast model's flat/log tables (HmmTables),
+  // built once per model copy, not per sequence.
   // -------------------------------------------------------------------
 
   def likelihood(spark: SparkSession, dir: String): DataFrame = {
@@ -185,7 +187,8 @@ object HmmQueries {
     Sequencer.sequenceDs(spark, dir)
       .flatMap { case (uid, syms) =>
         val (alpha, _) = HmmAlgorithms.forwardScaled(bc.value, syms.toArray)
-        alpha.last.zipWithIndex.map { case (v, s) => (uid, s, math.rint(v * 1e6) / 1e6) }
+        alpha.takeRight(bc.value.numStates).zipWithIndex
+          .map { case (v, s) => (uid, s, math.rint(v * 1e6) / 1e6) }
       }
       .toDF("user_id", "state", "alpha_last")
       .orderBy("user_id", "state")
@@ -200,7 +203,8 @@ object HmmQueries {
       .flatMap { case (uid, syms) =>
         val (_, scale) = HmmAlgorithms.forwardScaled(bc.value, syms.toArray)
         val beta = HmmAlgorithms.backwardScaled(bc.value, syms.toArray, scale)
-        beta.head.zipWithIndex.map { case (v, s) => (uid, s, math.rint(v * 1e6) / 1e6) }
+        beta.take(bc.value.numStates).zipWithIndex
+          .map { case (v, s) => (uid, s, math.rint(v * 1e6) / 1e6) }
       }
       .toDF("user_id", "state", "beta_first")
       .orderBy("user_id", "state")

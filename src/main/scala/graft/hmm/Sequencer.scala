@@ -1,8 +1,10 @@
 package graft.hmm
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, StringType, StructField, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.sources.Tables
 
@@ -13,19 +15,63 @@ import graft.sources.Tables
   *
   * Scale: the ONLY wide op the HMM pipeline needs — a single shuffle
   * by user_id, with map-side projection to 3 narrow columns
-  * (user_id, ts, sym) before the exchange. The vocab is tiny (distinct
-  * event types) and broadcast.
+  * (user_id, ts, sym) before the exchange. The vocab (distinct event
+  * types — tiny by definition) is collected once per (session,
+  * corpus) and applied as a map literal inside that projection, so
+  * the build neither joins nor scans `events` a second time.
   */
 object Sequencer {
 
+  /** One (session, corpus)'s vocabulary and sequences, built lazily
+    * (the cache's computeIfAbsent only allocates). `vocab` is the
+    * sorted distinct event types, ordered as Spark orders strings
+    * (UTF-8 binary, nulls first); a type's symbol id is its index. */
+  private final class Entry(val spark: SparkSession, dir: String) {
+    lazy val vocab: Array[String] = {
+      val types = Tables.events(spark, dir).select("event_type").distinct()
+        .collect().map(_.getString(0))
+      java.util.Arrays.sort(types, sparkStringOrder)
+      types
+    }
+    /** Null never matches a type: its events drop out, as an
+      * equi-join on the vocab would drop them. */
+    lazy val symbols: Map[String, Int] =
+      vocab.iterator.zipWithIndex.filter(_._1 != null).toMap
+    /** Persisted: every model-driven HMM query iterates the same
+      * sequences, and the build (the pipeline's one wide op) should run
+      * once per dataset, not once per query — exactly how an EM driver
+      * would cache its input on a cluster. */
+    lazy val sequences: Dataset[(Long, Seq[Int])] =
+      sequencesFrom(spark, withSym(spark, dir, symbols)).persist()
+  }
+
+  private val sparkStringOrder: Ordering[String] = (x, y) =>
+    if (x == null) { if (y == null) 0 else -1 }
+    else if (y == null) 1
+    else UTF8String.fromString(x).compareTo(UTF8String.fromString(y))
+
+  /** Keyed by (session, corpus content): the persisted Dataset is bound
+    * to its session's context, and a regenerated `events` table must
+    * not be served the old vocabulary. Entries of stopped contexts are
+    * swept on access. */
+  private val seqCache = new java.util.concurrent.ConcurrentHashMap[String, Entry]()
+
+  private def entry(spark: SparkSession, dir: String): Entry = {
+    val it = seqCache.values().iterator()
+    while (it.hasNext) if (it.next().spark.sparkContext.isStopped) it.remove()
+    seqCache.computeIfAbsent(
+      s"${graft.SessionKey(spark)}|${Tables.contentKey(spark, dir, "events")}",
+      _ => new Entry(spark, dir))
+  }
+
   /** event_type → contiguous symbol id, deterministic (ordered by
-    * event_type). The single-partition window is fine: it runs on the
-    * already-distinct vocab, which is small by definition.
+    * event_type): a local relation over the cached vocabulary.
     */
   def vocab(spark: SparkSession, dir: String): DataFrame = {
-    val w = Window.orderBy(col("event_type"))
-    Tables.events(spark, dir).select("event_type").distinct()
-      .withColumn("sym", row_number().over(w) - 1)
+    val rows = entry(spark, dir).vocab.iterator.zipWithIndex
+      .map { case (t, i) => Row(t, i) }.toSeq
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), StructType(Seq(
+      StructField("event_type", StringType), StructField("sym", IntegerType, nullable = false))))
   }
 
   val vocabSql: String =
@@ -40,28 +86,25 @@ object Sequencer {
       |  FROM (SELECT DISTINCT event_type FROM events)
       |)""".stripMargin
 
-  /** events projected to (user_id, ts_us, event_id, sym) with the
-    * vocab broadcast-joined on.
-    */
+  /** events projected to (user_id, ts_us, event_id, sym). */
   def eventsWithSym(spark: SparkSession, dir: String): DataFrame =
-    eventsWithVocab(spark, dir, vocab(spark, dir))
+    withSym(spark, dir, entry(spark, dir).symbols)
 
-  private def eventsWithVocab(spark: SparkSession, dir: String, v: DataFrame): DataFrame =
+  /** events under an event_type → symbol mapping; events of a type
+    * the mapping lacks drop out. */
+  private def withSym(spark: SparkSession, dir: String, mapping: Map[String, Int]): DataFrame =
     Tables.events(spark, dir)
-      .select(col("user_id"), unix_micros(col("ts")).as("ts_us"), col("event_id"), col("event_type"))
-      .join(broadcast(v), "event_type")
+      .select(col("user_id"), unix_micros(col("ts")).as("ts_us"), col("event_id"),
+        try_element_at(typedLit(mapping), col("event_type")).as("sym"))
+      .filter(col("sym").isNotNull)
 
   /** Long-form sequences: (user_id, pos, sym), pos ordered by
     * (ts, event_id). This is the SQL-oracled dump of `sequenceDs`.
     */
-  def build(spark: SparkSession, dir: String): DataFrame = {
-    val e = eventsWithSym(spark, dir)
-      .select(col("user_id"), struct(col("ts_us"), col("event_id"), col("sym")).as("e"))
-    e.groupBy("user_id")
-      .agg(array_sort(collect_list(col("e"))).as("es"))
-      .select(col("user_id"), posexplode(expr("transform(es, x -> x.sym)")).as(Seq("pos", "sym")))
+  def build(spark: SparkSession, dir: String): DataFrame =
+    sequencesFrom(spark, eventsWithSym(spark, dir)).toDF()
+      .select(col("user_id"), posexplode(col("syms")).as(Seq("pos", "sym")))
       .orderBy("user_id", "pos")
-  }
 
   val buildSql: String =
     s"""WITH $vocabCte
@@ -73,20 +116,10 @@ object Sequencer {
        |ORDER BY user_id, pos""".stripMargin
 
   /** Typed sequences for the HMM algorithms: one row per user with
-    * the full ordered symbol array. Persisted per dir: every
-    * model-driven HMM query iterates the same sequences, and the
-    * build (the pipeline's one wide op) should run once per dataset,
-    * not once per query — exactly how an EM driver would cache its
-    * input on a cluster.
+    * the full ordered symbol array, persisted per (session, corpus).
     */
-  private val seqCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Dataset[(Long, Seq[Int])]]()
-
   def sequenceDs(spark: SparkSession, dir: String): Dataset[(Long, Seq[Int])] =
-    // keyed by (session, dir): the persisted Dataset is bound to its
-    // SparkContext (see Dedup.shingled for the same rule)
-    seqCache.computeIfAbsent(s"${System.identityHashCode(spark)}|$dir", _ =>
-      sequencesFrom(spark, eventsWithSym(spark, dir)).persist())
+    entry(spark, dir).sequences
 
   /** Sequences under an EXPLICIT event_type → symbol mapping — the
     * warm-start fine-tune path, where the symbol space belongs to the
@@ -96,11 +129,8 @@ object Sequencer {
     */
   def sequenceDsMapped(
       spark: SparkSession, dir: String,
-      mapping: Map[String, Int]): Dataset[(Long, Seq[Int])] = {
-    import spark.implicits._
-    sequencesFrom(spark, eventsWithVocab(spark, dir,
-      mapping.toSeq.toDF("event_type", "sym")))
-  }
+      mapping: Map[String, Int]): Dataset[(Long, Seq[Int])] =
+    sequencesFrom(spark, withSym(spark, dir, mapping))
 
   private def sequencesFrom(spark: SparkSession, e: DataFrame): Dataset[(Long, Seq[Int])] = {
     import spark.implicits._

@@ -58,20 +58,6 @@ object Dedup {
   private val shingleCache =
     new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
 
-  /** Stable per-session cache-key prefix: a counter minted once per
-    * session OBJECT (identity-keyed WeakHashMap — the boxed-Long value
-    * holds no reference back to the session, so the entry is
-    * collectable). Unique for the JVM's lifetime, unlike
-    * identityHashCode, which can collide across sessions.
-    */
-  private val sessionIds = new java.util.WeakHashMap[SparkSession, java.lang.Long]()
-  private val sessionIdGen = new java.util.concurrent.atomic.AtomicLong()
-  private def sessionKey(spark: SparkSession): String = sessionIds.synchronized {
-    var id = sessionIds.get(spark)
-    if (id == null) { id = sessionIdGen.incrementAndGet(); sessionIds.put(spark, id) }
-    id.toString
-  }
-
   /** Session-scoped memoization for the five persisted-relation caches
     * below. Keyed by (session, dir, params): a persisted DataFrame is
     * bound to its SparkContext — a dir-only key would hand a later
@@ -87,7 +73,7 @@ object Dedup {
       spark: SparkSession, key: String)(build: => DataFrame): DataFrame = {
     val it = cache.entrySet().iterator()
     while (it.hasNext) if (it.next().getValue.sparkSession.sparkContext.isStopped) it.remove()
-    cache.computeIfAbsent(s"${sessionKey(spark)}|$key", _ => build)
+    cache.computeIfAbsent(s"${graft.SessionKey(spark)}|$key", _ => build)
   }
 
   // Lambda-bound tokenization (functions.ngramsFromTextExpr): splits

@@ -577,7 +577,7 @@ object Similarity {
     * the spec can assert the artifact layout on disk. */
   private[graft] def annIndexScratchDir(spark: SparkSession, dir: String): String = {
     val tag = java.security.MessageDigest.getInstance("MD5")
-      .digest(s"$dir|${Sketches.sessionScratchKey(spark)}".getBytes("UTF-8"))
+      .digest(s"$dir|${graft.SessionKey(spark)}".getBytes("UTF-8"))
       .map(b => f"$b%02x").mkString.take(16)
     new java.io.File(System.getProperty("java.io.tmpdir"),
       s"graft_ann_idx_${tag}_p${ProcessHandle.current().pid()}").toString

@@ -37,20 +37,6 @@ object Sketches {
     * even with millions of cells. */
   private val HllLgK = 12
 
-  /** Per-session scratch-path id, same identity-keyed WeakHashMap
-    * pattern as Dedup's cache key (unique for the JVM's lifetime,
-    * unlike identityHashCode which can collide across sessions).
-    */
-  private val sessionIds = new java.util.WeakHashMap[SparkSession, java.lang.Long]()
-  private val sessionIdGen = new java.util.concurrent.atomic.AtomicLong()
-  private[operators] def sessionScratchKey(spark: SparkSession): String = sessionKey(spark)
-
-  private def sessionKey(spark: SparkSession): String = sessionIds.synchronized {
-    var id = sessionIds.get(spark)
-    if (id == null) { id = sessionIdGen.incrementAndGet(); sessionIds.put(spark, id) }
-    id.toString
-  }
-
   /** sketch_hll_cube: distinct users per event type via a persisted
     * per-(type, day) HLL cube — written to parquet and read BACK, so
     * the query proves the artifact survives storage — rolled up with
@@ -73,7 +59,7 @@ object Sketches {
     // catch, round 13). The session id is minted once per session
     // object and stable for its lifetime.
     val tag = java.security.MessageDigest.getInstance("MD5")
-      .digest(s"$dir|${sessionKey(spark)}".getBytes("UTF-8"))
+      .digest(s"$dir|${graft.SessionKey(spark)}".getBytes("UTF-8"))
       .map(b => f"$b%02x").mkString.take(16)
     val cubeDir = new java.io.File(System.getProperty("java.io.tmpdir"),
       s"graft_hll_cube_${tag}_p${ProcessHandle.current().pid()}").toString

@@ -30,7 +30,7 @@ class HmmSpec extends AnyFunSuite {
   test("scaled forward rows sum to 1; scales multiply back to P(O)") {
     val obs = Array(0, 1, 2, 0, 2, 1, 0)
     val (alpha, scale) = HmmAlgorithms.forwardScaled(m, obs)
-    alpha.foreach(row => assert(math.abs(row.sum - 1.0) < 1e-12))
+    alpha.grouped(m.numStates).foreach(row => assert(math.abs(row.sum - 1.0) < 1e-12))
     val logp = scale.map(math.log).sum
     assert(math.abs(logp - HmmAlgorithms.logLikelihood(m, obs)) < 1e-12)
   }
@@ -40,7 +40,8 @@ class HmmSpec extends AnyFunSuite {
     val (alpha, scale) = HmmAlgorithms.forwardScaled(m, obs)
     val beta = HmmAlgorithms.backwardScaled(m, obs, scale)
     for (t <- obs.indices) {
-      val g = (0 until m.numStates).map(i => alpha(t)(i) * beta(t)(i) * scale(t)).sum
+      val k = m.numStates
+      val g = (0 until k).map(i => alpha(t * k + i) * beta(t * k + i) * scale(t)).sum
       assert(math.abs(g - 1.0) < 1e-10, s"gamma at t=$t sums to $g")
     }
   }
