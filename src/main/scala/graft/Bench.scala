@@ -60,10 +60,19 @@ object Bench {
     // on a cold query, and for non-memoized queries the warm median
     // stays the comparable number. The `queries` medians keep their
     // exact r18-and-earlier semantics — nothing removed or renamed.
+    // Heap after full GCs before the cold pass, after it and after the
+    // timed passes: what the session keeps (memo entries, sinks, caches).
+    def heapAfterGcMb(): Double = {
+      (1 to 3).foreach { _ => System.gc(); Thread.sleep(100) }
+      java.lang.management.ManagementFactory.getMemoryMXBean.getHeapMemoryUsage.getUsed / 1048576.0
+    }
+    val heapBeforeCold = heapAfterGcMb()
     val coldTimes = entries.map { case (name, fn) => name -> once(name, fn) }
+    val heapAfterCold = heapAfterGcMb()
     val (gcMs0, gcN0) = gcTotals()
     val passes = (1 to runs).map(_ => entries.map { case (name, fn) => once(name, fn) })
     val (gcMs1, gcN1) = gcTotals()
+    val heapAfterTimed = heapAfterGcMb()
     val perQuery = entries.zipWithIndex.map { case ((name, _), i) =>
       name -> passes.map(_(i)).sorted
     }
@@ -87,7 +96,10 @@ object Bench {
     val coldTotal = coldTimes.map(_._2).sum
     val total = if (results.nonEmpty) results.values.sum else 0.0
     val gc = s""""gc_sec":${(gcMs1 - gcMs0) / 1e3},"gc_count":${gcN1 - gcN0}"""
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"spread":$spread,"cold_sec":$coldJson,"cold_total_sec":$coldTotal,$gc,"runs":$runs,"errors":$errJson,"sf":"$sfDir"}"""
+    val heap = Seq("before_cold" -> heapBeforeCold, "after_cold" -> heapAfterCold,
+      "after_timed" -> heapAfterTimed).map { case (k, v) => "\"" + k + "\":" + math.round(v * 10) / 10.0 }
+      .mkString("\"heap_after_gc_mb\":{", ",", "}")
+    val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"spread":$spread,"cold_sec":$coldJson,"cold_total_sec":$coldTotal,$gc,$heap,"runs":$runs,"errors":$errJson,"sf":"$sfDir"}"""
     println(line)
     // ALSO persist to a file: stdout alone has been destroyed three
     // rounds running (driver tail-truncation + rc=1), losing all
@@ -113,7 +125,7 @@ object Bench {
     val topCold = coldTimes.sortBy(-_._2).take(12)
       .map { case (k, v) => "\"" + k + "\":" + (math.round(v * 100) / 100.0) }
       .mkString("{", ",", "}")
-    val compact = s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${results.size},"queries":$topQs,"queries_truncated_to":25,"cold_total_sec":${math.round(coldTotal * 100) / 100.0},"cold_queries_top12":$topCold,$gc,"runs":$runs,"n_errors":${errors.size},"sf":"$sfDir","full_json":"$outPath"}"""
+    val compact = s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${results.size},"queries":$topQs,"queries_truncated_to":25,"cold_total_sec":${math.round(coldTotal * 100) / 100.0},"cold_queries_top12":$topCold,$gc,$heap,"runs":$runs,"n_errors":${errors.size},"sf":"$sfDir","full_json":"$outPath"}"""
     println(compact)
     if (errors.nonEmpty) {
       System.err.println(s"bench: ${errors.size} queries failed: ${errors.keys.mkString(", ")}")

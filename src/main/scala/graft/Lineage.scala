@@ -61,6 +61,15 @@ object Lineage {
       case _              => None
     }
 
+  /** Delete the reliable-checkpoint dir backing a [[cut]] result once
+    * nothing reads it any more (a memo entry swept with its stopped
+    * context); a no-op on the localCheckpoint path.
+    */
+  private[graft] def dropCheckpoint(ds: Dataset[_]): Unit =
+    checkpointDirOf(ds).foreach { p =>
+      p.getFileSystem(ds.sparkSession.sparkContext.hadoopConfiguration).delete(p, true)
+    }
+
   /** Per-loop-variable lineage manager: `loop.cut(next)` cuts like
     * [[cut]] and then deletes the checkpoint dir of the PREVIOUS cut
     * made through this handle — safe exactly because each handle

@@ -242,17 +242,17 @@ object SparkEntry {
       operators.RelationDigest.digest(StreamingJobs.sessionWindowStream(s, d))),
   )
 
-  /** Pre-cut / un-memoized BUILD plans for queries whose entry
-    * DataFrame hides the real work behind a Lineage.cut LogicalRDD
-    * (r18 VERDICT item 6 / ADVICE): the committed fingerprint of the
-    * entry collapses to `codegen=1`, blinding PlanAuditSpec — and the
-    * sfx1/sfx10 tiers that catch size-dependent strategy regressions
-    * (broadcast→cartesian, r13) — to the build shape. Each entry here
-    * constructs the un-cut build DataFrame; PlanAuditSpec fingerprints
-    * them alongside the declared queries (names carry a `#part`
-    * suffix so they can never collide with a declared query).
-    * Construction may replay bounded eager prep (loop cuts, centroid
-    * seeds) but the returned plan is the scale-relevant body.
+  /** Pre-cut BUILD plans of the work a query's plan shows only as a
+    * LogicalRDD — a Lineage.cut, or a graft.Memo entry (which keeps
+    * rows, not plans): without these, PlanAuditSpec and its sfx1/sfx10
+    * tiers, which catch size-dependent strategy regressions
+    * (broadcast→cartesian, r13), would be blind to the build shape.
+    * Names carry a `#part` suffix, so they never collide with a
+    * declared query. Construction may replay bounded eager prep (loop
+    * cuts, centroid seeds, sub-relation memos) but the returned plan
+    * is the scale-relevant body; memo builds that hold no join or
+    * shuffle (shingles, rep shingles, CC labels: a loop cut) and the
+    * session-window stream (runs a stream) are not listed.
     */
   def auditPlans: Map[String, (SparkSession, String) => DataFrame] = Map(
     "lm_perplexity#cab"  -> TextAnalysis.lmPerplexityCabBuild _,
@@ -260,6 +260,17 @@ object SparkEntry {
     "bpe_apply#build"    -> ((s: SparkSession, d: String) => Bpe.bpeApplyBuild(s, d)),
     "pq_quantize#build"  -> ((s: SparkSession, d: String) => Similarity.pqQuantizeBuild(s, d, 4, 16, 3)),
     "pagerank#step"      -> ((s: SparkSession, d: String) => Graph.pagerankIterationBuild(s, d)),
+    "dedup_ngram_jaccard#groups" -> Dedup.textGroupsBuild _,
+    "dedup_ngram_jaccard#pairs"  -> ((s: SparkSession, d: String) => Dedup.repPairsBuild(s, d, Dedup.NearDupThreshold)),
+    "dedup_ngram_jaccard#build"  -> ((s: SparkSession, d: String) => Dedup.ngramJaccardCompute(s, d, Dedup.NearDupThreshold)),
+    "dedup_minhash_lsh#build"    -> ((s: SparkSession, d: String) => Dedup.minhashLshCompute(s, d, Dedup.NearDupThreshold)),
+    "dedup_substring_apply#build" -> ((s: SparkSession, d: String) => Dedup.dedupSubstringApplyBuild(s, d, 40)),
+    "dedup_embedding#groups"     -> Dedup.vecGroupsBuild _,
+    "dedup_embedding#pairs"      -> ((s: SparkSession, d: String) => Dedup.embeddingRepPairsBuild(s, d, 0.45)),
+    "semantic_dedup#build"       -> ((s: SparkSession, d: String) => Dedup.semanticDedupBuild(s, d, 0.45)),
+    "curate_corpus#dispositions" -> Curation.dispositionsBuild _,
+    "media_dedup#groups"         -> Multimodal.mediaHashGroupsBuild _,
+    "media_audio_dedup#groups"   -> Multimodal.audioHashGroupsBuild _,
   )
 
   /** DuckDB oracle SQL per query (same parquet tables, same aliases). */

@@ -149,15 +149,10 @@ object Bpe {
     * count, BPE token count, and the chars-per-token compression
     * ratio the tokenizer report tracks.
     */
-  // Result memoized per (session, dir, merges) through a lineage cut
-  // (r18): the digest companion re-ran the whole dict-encode loop +
-  // corpus join per invocation (the dedupSubstringApply precedent).
-  private val applyCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
+  // Result memoized per (session, corpus, merges) (r18): the digest
+  // companion re-ran the whole dict-encode loop + corpus join per call.
   def bpeApply(spark: SparkSession, dir: String, merges: Int = 10): DataFrame =
-    Dedup.memo(applyCache, spark, s"$dir|$merges")(
-      graft.Lineage.cut(bpeApplyBuild(spark, dir, merges)))
+    graft.Memo("bpeApply", spark, dir, "documents", merges)(bpeApplyBuild(spark, dir, merges))
 
   /** The un-memoized, un-cut encode build — exposed for the plan
     * audit (SparkEntry.auditPlans): the entry query's memo + cut

@@ -388,25 +388,17 @@ object Curation {
     * decision by construction.
     */
   private[operators] def dispositionsFor(spark: SparkSession, dir: String): DataFrame =
-    Dedup.memo(dispositionCache, spark, dir)(dispositionsBuild(spark, dir).persist())
+    graft.Memo("dispositions", spark, dir, "documents")(dispositionsBuild(spark, dir))
 
-  private val dispositionCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
-  private def dispositionsBuild(spark: SparkSession, dir: String): DataFrame = {
+  private[graft] def dispositionsBuild(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val docs = Tables.documents(spark, dir).select("doc_id", "source", "text")
     val exact = docs
       .select(col("doc_id"), md5(col("text").cast("binary")).as("h"))
       .withColumn("min_id", min(col("doc_id")).over(Window.partitionBy("h")))
       .select(col("doc_id"), (col("doc_id") =!= col("min_id")).as("exact_dup"))
-    // the CC keep/drop list is tiny (one row per grouped doc) but its
-    // LINEAGE is the whole iterative label-propagation plan —
-    // materialize it so the report joins against rows, not against a
-    // thousand-node replay of the fixpoint loop
     val near = Dedup.dedupGroups(spark, dir)
       .select(col("doc_id"), (col("doc_id") =!= col("canonical_id")).as("near_dup"))
-      .transform(graft.Lineage.cut)
     val qual = corpusFilterFor(docs).select(col("doc_id"), (!col("keep")).as("low_q"))
     docs
       .join(exact, "doc_id")
@@ -502,14 +494,11 @@ object Curation {
     */
   def corpusEmit(spark: SparkSession, dir: String, budget: Int = TokenBudget): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    // the kept frame fans out to BOTH sides of the cleaned join (the
-    // span-cut kernel derives from it) — materialize it once so the
-    // disposition pipeline (exact window + CC + quality scan) runs
-    // once, not twice (plan audit, r17); kept is distinct-text-sized
+    // kept fans out to BOTH sides of the cleaned join (the span-cut
+    // kernel derives from it); the dispositions are memoized rows
     val kept = dispositionsFor(spark, dir)
       .filter(col("disposition") === "kept")
       .select("doc_id", "source", "text")
-      .transform(graft.Lineage.cut)
     val cleaned = kept
       .join(Dedup.spanCutTexts(kept.select("doc_id", "text")), "doc_id")
       .select(col("doc_id"), col("source"), col("cleaned_text"),

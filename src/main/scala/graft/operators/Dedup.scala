@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Memo
 import graft.functions.{arrayDot, arrayNorm}
 import graft.sources.Tables
 
@@ -49,32 +50,12 @@ object Dedup {
   // -------------------------------------------------------------------
 
   /** Distinct word-3-gram shingles, one row per (doc_id, shingle).
-    * Persisted per dir: higher-order shingle construction is
-    * interpreted (and Catalyst re-evaluates the inner `split` per
+    * Memoized per (session, corpus): higher-order shingle construction
+    * is interpreted (and Catalyst re-evaluates the inner `split` per
     * lambda element), so build the relation once and let the
     * ngram/minhash pipelines and their verification joins all reuse
-    * the materialized form.
+    * the materialized rows.
     */
-  private val shingleCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
-  /** Session-scoped memoization for the five persisted-relation caches
-    * below. Keyed by (session, dir, params): a persisted DataFrame is
-    * bound to its SparkContext — a dir-only key would hand a later
-    * session a plan on a stopped context. Entries whose context has
-    * STOPPED are swept on every access (their persisted blocks died
-    * with the context; before r12 they leaked plan trees for the JVM's
-    * lifetime in a session-cycling JVM). Each cache stays a separate
-    * map: a builder may memoize a sub-relation (ngram → shingle), and
-    * nested computeIfAbsent on one ConcurrentHashMap risks a
-    * same-bin recursive-update failure.
-    */
-  private[graft] def memo(cache: java.util.concurrent.ConcurrentHashMap[String, DataFrame],
-      spark: SparkSession, key: String)(build: => DataFrame): DataFrame = {
-    val it = cache.entrySet().iterator()
-    while (it.hasNext) if (it.next().getValue.sparkSession.sparkContext.isStopped) it.remove()
-    cache.computeIfAbsent(s"${graft.SessionKey(spark)}|$key", _ => build)
-  }
 
   // Lambda-bound tokenization (functions.ngramsFromTextExpr): splits
   // the document exactly once per row under any plan transformation —
@@ -89,8 +70,7 @@ object Dedup {
       .as("shingle"))
 
   private def shingled(spark: SparkSession, dir: String): DataFrame =
-    memo(shingleCache, spark, dir)(
-      shingledOf(Tables.documents(spark, dir)).persist())
+    Memo("shingles", spark, dir, "documents")(shingledOf(Tables.documents(spark, dir)))
 
   /** Per-doc distinct shingle arrays, rebuilt from the cached
     * long-form relation (sorted for deterministic arrays).
@@ -113,9 +93,6 @@ object Dedup {
   // DuckDB oracles. On a unique-text corpus the contraction is the
   // identity and the kernel degenerates to the original doc-level join.
   // -------------------------------------------------------------------
-
-  private val groupCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
 
   /** One row per distinct SHINGLEABLE text (≥ 3 tokens — sub-3-token
     * docs produce no shingles and never enter any Jaccard relation):
@@ -140,49 +117,44 @@ object Dedup {
 
   /** The unfiltered distinct-text contraction every text-pure operator
     * derives from (dedup_substring needs sub-3-token docs too — a
-    * 40-char repeat doesn't require 3 whitespace tokens). Persisted
-    * once per (session, dir); [[textGroups]] is the shingleable
-    * filtered view over the same cached partitions.
+    * 40-char repeat doesn't require 3 whitespace tokens). Memoized
+    * once per (session, corpus); [[textGroups]] is the shingleable
+    * filtered view over the same materialized rows.
     */
   private[graft] def allTextGroups(spark: SparkSession, dir: String): DataFrame =
-    memo(groupCache, spark, dir)(
-      Tables.documents(spark, dir)
-        .filter(col("text").isNotNull)
-        .groupBy(xxhash64(col("text")).as("tk1"), xxhash64(lit(42L), col("text")).as("tk2"))
-        .agg(min(col("doc_id")).as("rep"),
-          sort_array(collect_list(col("doc_id"))).as("ids"),
-          count(lit(1)).as("sz"),
-          min(col("text")).as("text"),
-          max(col("text")).as("tmax"))
-        .select(col("rep"), col("ids"), col("sz"),
-          when(col("text") === col("tmax"), col("text"))
-            .otherwise(raise_error(lit("textGroups: 128-bit digest collision"))).as("text"))
-        .persist())
+    Memo("textGroups", spark, dir, "documents")(textGroupsBuild(spark, dir))
 
-  private val repShingleCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
+  private[graft] def textGroupsBuild(spark: SparkSession, dir: String): DataFrame =
+    Tables.documents(spark, dir)
+      .filter(col("text").isNotNull)
+      .groupBy(xxhash64(col("text")).as("tk1"), xxhash64(lit(42L), col("text")).as("tk2"))
+      .agg(min(col("doc_id")).as("rep"),
+        sort_array(collect_list(col("doc_id"))).as("ids"),
+        count(lit(1)).as("sz"),
+        min(col("text")).as("text"),
+        max(col("text")).as("tmax"))
+      .select(col("rep"), col("ids"), col("sz"),
+        when(col("text") === col("tmax"), col("text"))
+          .otherwise(raise_error(lit("textGroups: 128-bit digest collision"))).as("text"))
 
   /** Shingles of the contracted corpus: one (rep, shingle) relation,
     * identical in form to [[shingled]] but over representatives only.
     */
   private def repShingled(spark: SparkSession, dir: String): DataFrame =
-    memo(repShingleCache, spark, dir)(
-      shingledOf(textGroups(spark, dir)
-        .select(col("rep").as("doc_id"), col("text")))
-        .persist())
-
-  private val repPairCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
+    Memo("repShingles", spark, dir, "documents")(
+      shingledOf(textGroups(spark, dir).select(col("rep").as("doc_id"), col("text"))))
 
   /** Verified rep-level near-dup pairs (a_id < b_id are group reps,
     * jaccard rounded 6) — the contracted relation the expanded pair
     * set, the duplicate-group components, and the triangle census are
-    * all derived from. Memoized per (session, dir, τ).
+    * all derived from. Memoized per (session, corpus, τ).
     */
   private[operators] def repPairsFor(spark: SparkSession, dir: String,
       threshold: Double): DataFrame =
-    memo(repPairCache, spark, s"$dir|$threshold")(
-      pairKernelFromShingles(repShingled(spark, dir), threshold).persist())
+    Memo("repPairs", spark, dir, "documents", threshold)(repPairsBuild(spark, dir, threshold))
+
+  private[graft] def repPairsBuild(spark: SparkSession, dir: String, threshold: Double): DataFrame =
+    pairKernelFromShingles(repShingled(spark, dir), threshold)
 
   /** Expansion of a rep-level pair relation back to doc-id pairs:
     * each cross-content rep pair becomes the |A|×|B| clone images at
@@ -224,17 +196,11 @@ object Dedup {
     * to the naive all-pairs join.
     */
   // The verified pair relation feeds three queries (dedup_ngram_jaccard,
-  // dedup_groups, triangle_count) — memoized and persisted per
-  // (session, dir, threshold) like the minhashLsh/embedding candidate
-  // caches, so the PPJoin build runs once per dataset instead of once
-  // per caller (the pair set is tiny next to the corpus; at scale,
-  // recomputing an exact similarity join per consumer is the waste).
-  private val ngramCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
+  // dedup_groups, triangle_count) — memoized per (session, corpus, τ),
+  // so the PPJoin build runs once per dataset, not once per caller.
   def ngramJaccard(spark: SparkSession, dir: String, threshold: Double = 0.8): DataFrame =
-    memo(ngramCache, spark, s"$dir|$threshold")(
-      ngramJaccardCompute(spark, dir, threshold).persist())
+    Memo("ngramPairs", spark, dir, "documents", threshold)(
+      ngramJaccardCompute(spark, dir, threshold))
 
   /** Contraction + expansion (round 14): the PPJoin kernel runs over
     * distinct texts only, then the rep pairs expand back to doc pairs.
@@ -472,24 +438,19 @@ object Dedup {
     */
   val NearDupThreshold = 0.8
 
-  private val ccLabelCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
   /** Memoized CC labels over the rep-level near-dup pair graph —
     * (doc_id = rep, canonical_id). The fixpoint is an iterative
     * multi-action loop (the most expensive kernel in the dedup
     * family), and THREE operators consume its labels (dedup_groups,
     * curate_corpus via dispositionsFor, corpus_emit) — before r18
-    * each re-ran the loop. Keyed (session, dir, τ) like the other
-    * persisted relations; [[graft.Lineage.cut]] severs the loop's
+    * each re-ran the loop. Keyed (session, corpus, τ) like the other
+    * memoized relations; the memo's cut severs the loop's
     * thousand-node plan so consumers join against rows.
     */
   private[operators] def ccLabelsFor(spark: SparkSession, dir: String,
       threshold: Double): DataFrame =
-    memo(ccLabelCache, spark, s"$dir|$threshold") {
-      val rp = repPairsFor(spark, dir, threshold).select("a_id", "b_id")
-      graft.Lineage.cut(connectedComponentsFor(rp)._1)
-    }
+    Memo("ccLabels", spark, dir, "documents", threshold)(
+      connectedComponentsFor(repPairsFor(spark, dir, threshold).select("a_id", "b_id"))._1)
 
   /** Contracted (round 14): components are computed on the REP graph —
     * base-tier size at any clone factor — and members inherit their
@@ -627,16 +588,12 @@ object Dedup {
 
   // The verified-pairs relation is shared by three queries
   // (dedup_minhash_lsh, contam_minhash, dedup_incremental) — memoized
-  // and persisted per (session, dir, threshold) like the embedding
-  // candidate/cell caches, so the signature + banding build runs once
-  // per dataset instead of once per caller (the r10 bench flagged the
-  // cold rebuild as contam_minhash's 3.4× intra-run spread).
-  private val lshCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
+  // per (session, corpus, τ), so the signature + banding build runs
+  // once per dataset (the r10 bench flagged the cold rebuild as
+  // contam_minhash's 3.4× intra-run spread).
   def minhashLsh(spark: SparkSession, dir: String, threshold: Double = 0.8): DataFrame =
-    memo(lshCache, spark, s"$dir|$threshold")(
-      minhashLshCompute(spark, dir, threshold).persist())
+    Memo("lshPairs", spark, dir, "documents", threshold)(
+      minhashLshCompute(spark, dir, threshold))
 
   private[graft] def minhashLshCompute(spark: SparkSession, dir: String, threshold: Double): DataFrame = {
     val docs = shingleArrays(spark, dir)
@@ -1170,13 +1127,10 @@ object Dedup {
     * distinct texts, the expansion over documents.
     */
   def dedupSubstringApply(spark: SparkSession, dir: String, minLen: Int = 40): DataFrame =
-    memo(applyCache, spark, s"$dir|$minLen")(
-      dedupSubstringApplyBuild(spark, dir, minLen).persist())
+    Memo("substringApply", spark, dir, "documents", minLen)(
+      dedupSubstringApplyBuild(spark, dir, minLen))
 
-  private val applyCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
-  private def dedupSubstringApplyBuild(spark: SparkSession, dir: String, minLen: Int): DataFrame = {
+  private[graft] def dedupSubstringApplyBuild(spark: SparkSession, dir: String, minLen: Int): DataFrame = {
     val L = minLen
     val g = allTextGroups(spark, dir)
     g.join(cutSpanArrays(g, L), Seq("rep"), "left")
@@ -1572,9 +1526,6 @@ object Dedup {
     verifyCosine(e, embeddingCandidatesFor(spark, e, threshold), threshold)
   }
 
-  private val vecGroupCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
   /** Value contraction for the embedding corpus (round 14, engine-side
     * mirror of the contracted oracle): one row per distinct embedding
     * — (rep = min vec_id, ids sorted, sz, nrm). Cosine is a pure
@@ -1583,22 +1534,19 @@ object Dedup {
     * whole group, matching the per-vector filter they replace.
     */
   private def vecGroups(spark: SparkSession, dir: String): DataFrame =
-    memo(vecGroupCache, spark, dir)(
-      Tables.embeddings(spark, dir)
-        .groupBy("embedding")
-        .agg(min(col("vec_id")).as("rep"),
-          sort_array(collect_list(col("vec_id"))).as("ids"),
-          count(lit(1)).as("sz"))
-        .withColumn("nrm", arrayNorm(col("embedding")))
-        .filter(col("nrm") > 0)
-        .persist())
+    Memo("vecGroups", spark, dir, "embeddings")(vecGroupsBuild(spark, dir))
+
+  private[graft] def vecGroupsBuild(spark: SparkSession, dir: String): DataFrame =
+    Tables.embeddings(spark, dir)
+      .groupBy("embedding")
+      .agg(min(col("vec_id")).as("rep"),
+        sort_array(collect_list(col("vec_id"))).as("ids"),
+        count(lit(1)).as("sz"))
+      .withColumn("nrm", arrayNorm(col("embedding")))
+      .filter(col("nrm") > 0)
 
   // The verified rep-level pair relation is memoized per (session,
-  // dir, threshold) — repeated queries over one dataset pay the
-  // k-means cell build once, same rule as the shingle caches.
-  private val cellCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
+  // corpus, τ): repeated queries pay the k-means cell build once.
   /** Contracted (round 14): the cell-blocked pairwise join runs over
     * DISTINCT embeddings (rep per value), then clone images and
     * C(sz,2) cliques at cos_sim exactly 1.0 expand linearly in the
@@ -1612,15 +1560,15 @@ object Dedup {
     // Contraction precondition (round-15 advice): cliques expand at
     // cos_sim = 1.0 unconditionally — sound only while τ ≤ 1.0.
     require(threshold <= 1.0, s"cosine threshold must be <= 1.0, got $threshold")
-    val g = vecGroups(spark, dir)
-    val reps = g.select(col("rep").as("vec_id"), col("embedding"), col("nrm"))
-    // Lineage.cut, not persist (r18): the verified pair relation's
-    // lineage embeds the k-means cell build — re-analyzed per reuse
-    // (same class as the semCache fix above)
-    val rp = memo(cellCache, spark, s"$dir|$threshold")(
-      graft.Lineage.cut(
-        verifyCosine(reps, embeddingCandidatesFor(spark, reps, threshold), threshold)))
-    expandPairs(rp, g, "cos_sim", lit(1.0)).orderBy("a_id", "b_id")
+    val rp = Memo("cellPairs", spark, dir, "embeddings", threshold)(
+      embeddingRepPairsBuild(spark, dir, threshold))
+    expandPairs(rp, vecGroups(spark, dir), "cos_sim", lit(1.0)).orderBy("a_id", "b_id")
+  }
+
+  private[graft] def embeddingRepPairsBuild(spark: SparkSession, dir: String,
+      threshold: Double): DataFrame = {
+    val reps = vecGroups(spark, dir).select(col("rep").as("vec_id"), col("embedding"), col("nrm"))
+    verifyCosine(reps, embeddingCandidatesFor(spark, reps, threshold), threshold)
   }
 
   /** Contracted (round 14): cosine is a pure function of the embedding
@@ -1697,25 +1645,21 @@ object Dedup {
     * dedup_groups connected-components machinery; the keep choice is
     * one row_number window over (group, centroid-cosine).
     */
-  // The verdict relation is deterministic per (dir, τ) — memoized and
-  // persisted per session like the candidate/cell caches, so repeated
-  // queries pay the k-means + connected-components build once.
-  private val semCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
+  // The verdict relation is memoized per (session, corpus, τ): repeated
+  // queries pay the k-means + CC build once, and read rows instead of
+  // re-analyzing its ~10 MB plan (~2 s of driver planning at sf0.1).
 
-  // Lineage.cut, not persist (r18): the verdict's lineage embeds the
-  // k-means assign + CC fixpoint tree — ~10 MB of formatted plan that
-  // Catalyst re-analyzes on EVERY reuse (the digest companion, each
-  // bench pass), ~2 s of pure driver planning per invocation measured
-  // at sf0.1 (guide §7.3 "very large plans"). The cut stores an O(1)
-  // LogicalRDD; content is identical (cut materializes the same rows).
   def semanticDedup(spark: SparkSession, dir: String, threshold: Double = 0.45): DataFrame =
-    memo(semCache, spark, s"$dir|$threshold")(
-      graft.Lineage.cut(semanticDedupFor(spark,
-        Tables.embeddings(spark, dir).select(
-          col("vec_id"), col("embedding"), arrayNorm(col("embedding")).as("nrm"))
-          .filter(col("nrm") > 0), // no direction — see embeddingDedupFor
-        threshold)))
+    Memo("semanticDedup", spark, dir, "embeddings", threshold)(
+      semanticDedupBuild(spark, dir, threshold))
+
+  private[graft] def semanticDedupBuild(spark: SparkSession, dir: String,
+      threshold: Double): DataFrame =
+    semanticDedupFor(spark,
+      Tables.embeddings(spark, dir).select(
+        col("vec_id"), col("embedding"), arrayNorm(col("embedding")).as("nrm"))
+        .filter(col("nrm") > 0), // no direction — see embeddingDedupFor
+      threshold)
 
   private[graft] def semanticDedupFor(
       spark: SparkSession, raw: DataFrame, threshold: Double): DataFrame = {

@@ -512,12 +512,11 @@ object Multimodal {
     * pigeonhole self-join below would otherwise decode every image
     * TWICE even within one call.
     */
-  private val mediaGroupCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
   private[graft] def mediaHashGroups(spark: SparkSession, dir: String): DataFrame =
-    Dedup.memo(mediaGroupCache, spark, dir)(
-      hashGroupsOf(spark, mediaBinaryTable(spark, dir).filter(_.media_type == "bmp"),
-        blockMeanHash).persist())
+    graft.Memo("mediaGroups", spark, dir, "documents")(mediaHashGroupsBuild(spark, dir))
+
+  private[graft] def mediaHashGroupsBuild(spark: SparkSession, dir: String): DataFrame =
+    hashGroupsOf(spark, mediaBinaryTable(spark, dir).filter(_.media_type == "bmp"), blockMeanHash)
 
   /** (doc_id → 64-bit fingerprint) → distinct-fingerprint groups, for
     * any media fingerprint family (image block-mean, audio band
@@ -697,12 +696,11 @@ object Multimodal {
   def mediaAudioDedup(spark: SparkSession, dir: String, maxHamming: Int = 3): DataFrame =
     audioDedupFromGroups(audioHashGroups(spark, dir), maxHamming)
 
-  private val audioGroupCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
   private[graft] def audioHashGroups(spark: SparkSession, dir: String): DataFrame =
-    Dedup.memo(audioGroupCache, spark, dir)(
-      hashGroupsOf(spark, mediaBinaryTable(spark, dir).filter(_.media_type == "wav"),
-        audioFingerprint).persist())
+    graft.Memo("audioGroups", spark, dir, "documents")(audioHashGroupsBuild(spark, dir))
+
+  private[graft] def audioHashGroupsBuild(spark: SparkSession, dir: String): DataFrame =
+    hashGroupsOf(spark, mediaBinaryTable(spark, dir).filter(_.media_type == "wav"), audioFingerprint)
 
   /** Payload-injectable form (spec plants near-identical and far
     * clips; unmemoized like [[mediaDedupFor]]). */

@@ -321,16 +321,12 @@ object Similarity {
     * and scoring is pure scan-side arithmetic (measured in the spec
     * as ADC recall against the exact search).
     */
-  // Result memoized per (session, dir, params) through a lineage cut
-  // (r18): the digest companion re-ran the assignment join + argmin
-  // per invocation (the dedupSubstringApply precedent).
-  private val pqResultCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
+  // Result memoized per (session, corpus, params) (r18): the digest
+  // companion re-ran the assignment join + argmin per invocation.
   def pqQuantize(spark: SparkSession, dir: String,
       m: Int = 4, ksub: Int = 16, iters: Int = 3): DataFrame =
-    Dedup.memo(pqResultCache, spark, s"$dir|$m|$ksub|$iters")(
-      graft.Lineage.cut(pqQuantizeBuild(spark, dir, m, ksub, iters)))
+    graft.Memo("pqQuantize", spark, dir, "embeddings", m, ksub, iters)(
+      pqQuantizeBuild(spark, dir, m, ksub, iters))
 
   /** Un-memoized, un-cut build — exposed for the plan audit
     * (SparkEntry.auditPlans; the entry's memo + cut collapse its

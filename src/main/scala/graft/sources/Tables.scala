@@ -17,15 +17,15 @@ object Tables {
   def table(spark: SparkSession, dir: String, name: String): DataFrame =
     spark.read.parquet(s"$dir/$name.parquet")
 
-  /** Cache key for the (dir)-keyed pure-data caches (Lloyd centroids,
-    * PQ codebooks, BPE merge tables): `dir` plus a cheap content
-    * signature — (leaf name, length, mtime) per backing file, order-
-    * independent fold — of the table the cached model derives from.
-    * Those caches survive across sessions by design, but /root/testdata
-    * HAS been regenerated mid-JVM before (round 8, CLAUDE.md), which
-    * would silently serve stale models; with the signature in the key
-    * a regeneration is a cache MISS, never a stale hit (r19, ADVICE
-    * r18). One FS listing per cache probe — nothing at scale.
+  /** Cache key for everything derived from a table (Lloyd centroids,
+    * PQ codebooks, BPE merge tables, every [[graft.Memo]] entry): `dir`
+    * plus a cheap content signature — a 64-bit hash of (leaf name,
+    * length, mtime) per backing file, folded in name order. Corpora
+    * HAVE been regenerated in place mid-JVM (round 8, CLAUDE.md); with
+    * the signature in the key a rewrite is a cache MISS, never a stale
+    * hit (r19, ADVICE r18) — 64 bits so that a hash collision between
+    * the old and new file cannot be one either. One FS listing per
+    * cache probe — nothing at scale.
     */
   def contentKey(spark: SparkSession, dir: String, name: String): String = {
     val p = new org.apache.hadoop.fs.Path(dir, s"$name.parquet")
@@ -34,9 +34,9 @@ object Tables {
       if (st.isDirectory)
         fs.listStatus(st.getPath).sortBy(_.getPath.getName)
           .map(sig).foldLeft(1L)((a, h) => a * 1000003L + h)
-      else scala.util.hashing.MurmurHash3
-        .stringHash(s"${st.getPath.getName}|${st.getLen}|${st.getModificationTime}")
-        .toLong
+      else org.apache.spark.sql.catalyst.expressions.XXH64.hashUTF8String(
+        org.apache.spark.unsafe.types.UTF8String.fromString(
+          s"${st.getPath.getName}|${st.getLen}|${st.getModificationTime}"), 42L)
     val s0 =
       try { if (fs.exists(p)) sig(fs.getFileStatus(p)) else 0L }
       catch { case _: java.io.IOException => 0L }

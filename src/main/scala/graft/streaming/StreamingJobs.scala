@@ -724,16 +724,11 @@ object StreamingJobs {
   // The watermark-closed session set is deterministic for a finite
   // corpus (its content digest is pinned), and the digest companion
   // query re-ran the WHOLE stream — two full stateful runs per bench
-  // pass / Verify dump. Memoize the materialized result per (session,
-  // dir, glob) like the other shared bases (the dedupSubstringApply
-  // precedent); the cut stores an O(1) LogicalRDD and lets the sink
-  // view drop immediately (no per-invocation catalog growth).
-  private val sswCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
+  // pass / Verify dump. Memoized per (session, corpus, glob); the memo
+  // keeps rows, so the sink view drops right after the run.
   def sessionWindowStream(spark: SparkSession, dir: String,
       glob: String = "events.parquet"): DataFrame =
-    graft.operators.Dedup.memo(sswCache, spark, s"$dir|$glob")(
+    graft.Memo("sessionWindowStream", spark, dir, "events", glob)(
       sessionWindowStreamRun(spark, dir, glob))
 
   private def sessionWindowStreamRun(spark: SparkSession, dir: String,
@@ -753,7 +748,8 @@ object StreamingJobs {
         col("n_events"), col("session_value"))
       .writeStream.outputMode("append").format("memory").queryName(sink).start()
     try query.processAllAvailable() finally query.stop()
-    val out = graft.Lineage.cut(spark.table(sink).orderBy("user_id", "start_us"))
+    // the analyzed plan holds the sink itself, so the view can go now
+    val out = spark.table(sink).orderBy("user_id", "start_us")
     spark.catalog.dropTempView(sink)
     out
   }

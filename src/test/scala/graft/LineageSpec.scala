@@ -78,6 +78,17 @@ class LineageSpec extends AnyFunSuite {
     }
   }
 
+  test("dropCheckpoint deletes a cut's reliable checkpoint dir (the stopped-context memo sweep)") {
+    import spark.implicits._
+    withCheckpointDir { dir =>
+      def rddDirs = filesUnder(dir).map(_.getParentFile.getName).filter(_.startsWith("rdd-")).toSet
+      val cut = Lineage.cut(spark.range(100).map(_ + 1).toDF("v"))
+      assert(rddDirs.size == 1, s"expected one checkpoint dir, got $rddDirs")
+      Lineage.dropCheckpoint(cut)
+      assert(rddDirs.isEmpty, "dropCheckpoint left the cut's checkpoint dir behind")
+    }
+  }
+
   test("pagerank result is identical on the localCheckpoint and reliable-checkpoint paths") {
     def run() = graft.operators.Graph.pagerank(spark, sfDir).collect()
       .map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getDouble(3))).toSeq

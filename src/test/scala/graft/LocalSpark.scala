@@ -82,4 +82,15 @@ object LocalSpark {
       s"shared session poisoned at $where: ${dirty.mkString(", ")} — " +
         "a conf-mutating spec failed to restore (use LocalSpark.withSessionConf)")
   }
+
+  /** True iff `df` is a lineage cut ([[graft.Lineage.cut]], what every
+    * [[graft.Memo]] entry is): its analyzed plan is a single LogicalRDD
+    * over an already-checkpointed RDD — materialized rows, not a
+    * replayable plan.
+    */
+  def isLineageCut(df: org.apache.spark.sql.DataFrame): Boolean =
+    df.queryExecution.analyzed match {
+      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.isCheckpointed
+      case _                                             => false
+    }
 }

@@ -72,19 +72,6 @@ class PlanAuditSpec extends AnyFunSuite {
     }
   }
 
-  // queries whose plan embeds an eagerly-built memoized relation (the
-  // shared LSH verified-pairs / CC label loop): the printed plan of a
-  // loop-built DataFrame depends on which loop-intermediate cache
-  // entries exist when its executedPlan is first forced, so the
-  // fingerprint is construction-order-dependent across suites — same
-  // class as the eager-execution entries in `skip`, excluded here for
-  // the same reason (their scale shape is asserted by DedupSpec's own
-  // candidate-count/plan tests instead).
-  private val fpSkip = Set(
-    "contam_minhash", "dedup_incremental", "dedup_minhash_lsh", "semantic_dedup",
-    "dedup_ngram_jaccard", // r11: PPJoin pair relation memoized like minhashLsh
-    "semantic_dedup_digest") // r12: digest embeds the same loop-built lineage as its base
-
   /** Snapshot-compare (or regen with GRAFT_PLAN_FP_REGEN=1) the plan
     * fingerprints of every auditable query at `dir` against the
     * committed tsv `fileName`. Shared by the base-tier test and the
@@ -92,12 +79,14 @@ class PlanAuditSpec extends AnyFunSuite {
     * spans are size-dependent, so each tier gets its own snapshot.
     */
   private def compareOrRegen(dir: String, fileName: String): Unit = {
-    val names = SparkEntry.queries.keys.toSeq.filterNot(skip).filterNot(fpSkip).sorted
+    val names = SparkEntry.queries.keys.toSeq.filterNot(skip).sorted
     // cache-warm canonical state: constructing a query's DataFrame
-    // registers its memoized persisted relations (sequences, shingles,
-    // models) with the shared CacheManager, which rewrites later plans
-    // to InMemoryTableScan. One warm-up construction pass makes the
-    // fingerprints independent of which suites ran before this one.
+    // builds its memo entries (graft.Memo: lineage cuts, read as
+    // LogicalRDD scans) and registers the remaining persisted relations
+    // (sequences, loop intermediates) with the shared CacheManager,
+    // which rewrites later plans to InMemoryTableScan. One warm-up
+    // construction pass makes the fingerprints independent of which
+    // suites ran before this one.
     names.foreach(n => SparkEntry.queries(n)(spark, dir))
     // pre-cut build plans (r19): queries whose entry fingerprint is a
     // single LogicalRDD get their un-cut build shape audited under a

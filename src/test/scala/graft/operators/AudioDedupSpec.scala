@@ -111,8 +111,8 @@ class AudioDedupSpec extends AnyFunSuite {
       "second audio call must hit the (session, dir) cache, not re-decode")
     assert(Multimodal.mediaHashGroups(spark, dir) eq Multimodal.mediaHashGroups(spark, dir),
       "second image call must hit the (session, dir) cache, not re-decode")
-    // and the cached relation is actually persisted (decode-once)
-    assert(Multimodal.audioHashGroups(spark, dir).storageLevel.useMemory)
-    assert(Multimodal.mediaHashGroups(spark, dir).storageLevel.useMemory)
+    // and the cached relation is materialized rows (decode-once)
+    assert(LocalSpark.isLineageCut(Multimodal.audioHashGroups(spark, dir)))
+    assert(LocalSpark.isLineageCut(Multimodal.mediaHashGroups(spark, dir)))
   }
 }

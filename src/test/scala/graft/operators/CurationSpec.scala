@@ -298,9 +298,9 @@ class CurationSpec extends AnyFunSuite {
       "second CC-labels call must hit the (session, dir, τ) cache")
     assert(Dedup.dedupSubstringApply(spark, sfDir) eq Dedup.dedupSubstringApply(spark, sfDir),
       "the apply (and its digest companion) must share one memoized base")
-    assert(Curation.dispositionsFor(spark, sfDir).storageLevel.useMemory,
-      "the dispositions frame must be persisted, not a replayable plan")
-    assert(Dedup.dedupSubstringApply(spark, sfDir).storageLevel.useMemory,
-      "the apply frame must be persisted, not a replayable plan")
+    assert(graft.LocalSpark.isLineageCut(Curation.dispositionsFor(spark, sfDir)),
+      "the dispositions frame must be materialized rows, not a replayable plan")
+    assert(graft.LocalSpark.isLineageCut(Dedup.dedupSubstringApply(spark, sfDir)),
+      "the apply frame must be materialized rows, not a replayable plan")
   }
 }
