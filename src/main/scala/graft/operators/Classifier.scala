@@ -164,7 +164,8 @@ object Classifier {
     TrainResult(w, losses)
   }
 
-  // Weights are pure data — memoized per dir like the HMM model.
+  // Weights are pure data — memoized per documents content like the
+  // HMM model.
   private val modelCache =
     new java.util.concurrent.ConcurrentHashMap[String, TrainResult]()
 
@@ -174,7 +175,7 @@ object Classifier {
     * process) — carries a pinned-literal oracle.
     */
   def qualityLr(spark: SparkSession, dir: String): DataFrame =
-    qualityLrFor(Tables.documents(spark, dir), Some(dir))
+    qualityLrFor(Tables.documents(spark, dir), Some(Tables.contentKey(spark, dir, "documents")))
 
   private[graft] def qualityLrFor(
       docs: DataFrame, memoKey: Option[String], iters: Int = 8): DataFrame = {

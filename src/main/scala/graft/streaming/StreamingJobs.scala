@@ -4,7 +4,8 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode,
+  StreamingQuery, StreamingQueryProgress}
 import org.apache.spark.sql.types._
 
 /** Structured Streaming jobs (SURVEY.md §2.8) — the streaming analog
@@ -13,14 +14,22 @@ import org.apache.spark.sql.types._
   * aggregate.
   *
   * The driver-facing queries run the stream to completion over the
-  * static directory (processAllAvailable on a memory sink) in
-  * COMPLETE output mode so the full result is comparable to the batch
-  * equivalent. Note: complete mode retains all aggregation state (the
-  * watermark is declared but does not evict) — fine for a finite test
-  * corpus. Pointing the same transform at an unbounded production
-  * source requires `update`/`append` output mode, where the declared
-  * 30-minute watermark DOES bound state to the horizon, partitioned
-  * by group key across executors.
+  * static directory in COMPLETE output mode so the full result is
+  * comparable to the batch equivalent. Note: complete mode retains all
+  * aggregation state (the watermark is declared but does not evict) —
+  * fine for a finite test corpus. Pointing the same transform at an
+  * unbounded production source requires `update`/`append` output mode,
+  * where the declared 30-minute watermark DOES bound state to the
+  * horizon, partitioned by group key across executors.
+  *
+  * Runner contract: every in-process run (memory sink or foreachBatch)
+  * goes through ONE drain — [[drain]] sizes the state partitions,
+  * starts the query, runs it to exhaustion and stops it. A memory-sink
+  * run ([[toMemory]]) then drops its sink view before returning, so no
+  * call leaves a table in the caller's catalog; the returned frame's
+  * analyzed plan holds the sink itself, so it still reads the rows.
+  * The startCheckpointed* production starters are not runners: their
+  * callers own the returned query.
   */
 object StreamingJobs {
 
@@ -31,17 +40,26 @@ object StreamingJobs {
     * NEVER re-declare a parquet column's physical type in a readStream
     * schema you don't control: a wrong declaration can READ
     * SUCCESSFULLY with wrong values (int64 µs read as "nanos" divides
-    * to January 1970 — plausible-looking, silently wrong). Instead a
-    * one-time batch read probes the footer of the SAME matched files,
-    * that scanned schema is declared verbatim, and
+    * to January 1970 — plausible-looking, silently wrong). Instead
+    * [[fileStream]] declares the probed footer schema verbatim, and
     * [[graft.sources.Tables.normalizeEventTs]] branches on the actual
-    * dtype (INT64 nanos / TIMESTAMP_NTZ / TIMESTAMP). The probe costs
-    * one footer read per stream start — nothing at scale.
+    * dtype (INT64 nanos / TIMESTAMP_NTZ / TIMESTAMP).
     */
   private def eventsStream(
       spark: SparkSession, dir: String, glob: String,
       maxFilesPerTrigger: Option[Int] = Some(1)): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    graft.sources.Tables.normalizeEventTs(fileStream(spark, dir, glob, maxFilesPerTrigger))
+  }
+
+  /** The one file-stream reader: a one-time batch read probes the
+    * footer of the SAME matched files, and that scanned schema is
+    * declared verbatim for the stream. The probe costs one footer read
+    * per stream start — nothing at scale.
+    */
+  private def fileStream(
+      spark: SparkSession, dir: String, glob: String,
+      maxFilesPerTrigger: Option[Int]): DataFrame = {
     val (readPath, filterOpt) = resolveStreamPath(dir, glob)
     // NOTE: probing requires at least one matched file at stream start (a
     // behavior change vs a declared schema, which would start and emit
@@ -53,15 +71,14 @@ object StreamingJobs {
         case e: org.apache.spark.sql.AnalysisException =>
           throw new IllegalArgumentException(
             s"no files matching '$glob' under $dir at stream start — " +
-              "the footer probe needs one file to declare the physical ts schema", e)
+              "the footer probe needs one file to declare the physical schema", e)
       }
     val r0 = spark.readStream.schema(probed)
     val r1 = maxFilesPerTrigger.fold(r0)(m => r0.option("maxFilesPerTrigger", m.toString))
-    graft.sources.Tables.normalizeEventTs(
-      filterOpt.fold(r1)(g => r1.option("pathGlobFilter", g)).parquet(readPath))
+    filterOpt.fold(r1)(g => r1.option("pathGlobFilter", g)).parquet(readPath)
   }
 
-  /** Two corpus layouts (see [[eventsStream]]): the driver testdata
+  /** Two corpus layouts (see [[fileStream]]): the driver testdata
     * stores each table as ONE file ($dir/events.parquet —
     * pathGlobFilter on the leaf name), but any Spark-written corpus
     * (ScaleUp's ~sf1 tier, production data) stores it as a DIRECTORY
@@ -122,10 +139,11 @@ object StreamingJobs {
     * (the layout gate runs the whole surface at shuffle.partitions=7
     * and requires bit-identical outputs).
     *
-    * Applied to every memory-sink/foreachBatch entry runner; NOT to
-    * the startCheckpointed* production starters — their state layout
-    * is pinned by the caller-owned checkpoint across restarts, and
-    * the recovery specs drive those with explicit session conf.
+    * Applied by [[drain]] only, so every memory-sink/foreachBatch run
+    * gets it by construction; NOT the startCheckpointed* production
+    * starters — their state layout is pinned by the caller-owned
+    * checkpoint across restarts, and the recovery specs drive those
+    * with explicit session conf.
     *
     * Measured (StreamProbe, sf0.1, local[32], shuffle.partitions
     * sweep 32→1): every stateful entry runs 1.4-2× faster at 1
@@ -146,6 +164,42 @@ object StreamingJobs {
     spark.conf.set(key, parts.toString)
     try body finally spark.conf.set(key, prev)
   }
+
+  /** The one in-process stream runner: starts `writer` under
+    * [[withStateParts]], runs it over everything available, stops it
+    * and returns its per-batch progress. `writer` is built inside, so
+    * the whole start runs under the sized state layout.
+    */
+  private def drain(spark: SparkSession, dir: String, glob: String)(
+      writer: => DataStreamWriter[_]): Seq[StreamingQueryProgress] =
+    withStateParts(spark, dir, glob) {
+      val query = writer.start()
+      try {
+        query.processAllAvailable()
+        query.recentProgress.toSeq
+      } finally query.stop()
+    }
+
+  private val sinkSeq = new java.util.concurrent.atomic.AtomicLong()
+
+  /** [[drain]] into a memory sink: returns the sink's rows and the run's
+    * progress. The sink's temp view is dropped before returning; the
+    * frame's analyzed plan holds the sink, so it still reads the rows,
+    * and they are garbage once the caller drops the frame.
+    */
+  private def toMemory(spark: SparkSession, dir: String, glob: String, mode: String)(
+      stream: => DataFrame): (DataFrame, Seq[StreamingQueryProgress]) = {
+    val sink = s"graft_stream_sink_${sinkSeq.incrementAndGet()}"
+    val progress = drain(spark, dir, glob)(
+      stream.writeStream.outputMode(mode).format("memory").queryName(sink))
+    val out = spark.table(sink)
+    spark.catalog.dropTempView(sink)
+    (out, progress)
+  }
+
+  /** Per-batch state-store row counts (first stateful operator). */
+  private def stateRows(progress: Seq[StreamingQueryProgress]): Seq[Long] =
+    progress.filter(_.stateOperators.nonEmpty).map(_.stateOperators.head.numRowsTotal)
 
   /** The streaming transform, defined once so batch parity tests run
     * the identical logic on a batch DataFrame. Accepts either a raw
@@ -173,18 +227,10 @@ object StreamingJobs {
     * production source runs in.
     */
   def runWindowAggUpdate(
-      spark: SparkSession, dir: String, glob: String): (DataFrame, Seq[Long]) = withStateParts(spark, dir, glob) {
-    val sink = s"stream_window_update_${System.nanoTime()}"
-    val stream = eventsStream(spark, dir, glob)
-    val query = windowAgg(stream)
-      .writeStream.outputMode("update").format("memory").queryName(sink).start()
-    val states = try {
-      query.processAllAvailable()
-      query.recentProgress.toSeq
-        .filter(_.stateOperators.nonEmpty)
-        .map(_.stateOperators.head.numRowsTotal)
-    } finally query.stop()
-    (spark.table(sink), states)
+      spark: SparkSession, dir: String, glob: String): (DataFrame, Seq[Long]) = {
+    val (out, progress) = toMemory(spark, dir, glob, "update")(
+      windowAgg(eventsStream(spark, dir, glob)))
+    (out, stateRows(progress))
   }
 
   /** Streaming dedup as keep-earliest: first event time per
@@ -211,18 +257,15 @@ object StreamingJobs {
       |GROUP BY user_id, event_type
       |ORDER BY user_id, event_type""".stripMargin
 
-  def streamDedup(spark: SparkSession, dir: String): DataFrame = withStateParts(spark, dir, "events.parquet") {
-    val sink = s"stream_dedup_${System.nanoTime()}"
+  def streamDedup(spark: SparkSession, dir: String): DataFrame = {
     // one-batch ingest (r19): the min-aggregate is unwatermarked and
     // batch-count-invariant, so per-file triggers only multiply the
     // per-microbatch state-commit cost on a multi-part corpus (32-part
     // tier: 12.6 s -> ~1 s). Cross-batch incremental delivery stays
     // exercised by the chunked spec corpora.
-    val stream = eventsStream(spark, dir, "events.parquet", maxFilesPerTrigger = None)
-    val query = dedupTransform(stream)
-      .writeStream.outputMode("complete").format("memory").queryName(sink).start()
-    try query.processAllAvailable() finally query.stop()
-    spark.table(sink).orderBy("user_id", "event_type")
+    toMemory(spark, dir, "events.parquet", "complete")(
+      dedupTransform(eventsStream(spark, dir, "events.parquet", maxFilesPerTrigger = None))
+    )._1.orderBy("user_id", "event_type")
   }
 
   /** One event inside the stateful sessionizer. `ts` carries the
@@ -331,21 +374,19 @@ object StreamingJobs {
       dir: String,
       glob: String,
       emitOpen: Boolean,
-      maxFilesPerTrigger: Option[Int]): DataFrame = withStateParts(spark, dir, glob) {
+      maxFilesPerTrigger: Option[Int]): DataFrame = {
     import spark.implicits._
-    val sink = s"stream_sessionize_${System.nanoTime()}"
-    val stream = eventsStream(spark, dir, glob, maxFilesPerTrigger)
-      .withWatermark("ts", "30 minutes")
-      .select(col("user_id"), unix_micros(col("ts")).as("ts_us"),
-        col("event_id"), col("value"), col("ts"))
-      .as[SessEvent]
-    val query = stream
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.EventTimeTimeout())(
-        sessionizeFn(emitOpen))
-      .writeStream.outputMode("append").format("memory").queryName(sink).start()
-    try query.processAllAvailable() finally query.stop()
-    spark.table(sink).orderBy("user_id", "session_id")
+    toMemory(spark, dir, glob, "append")(
+      eventsStream(spark, dir, glob, maxFilesPerTrigger)
+        .withWatermark("ts", "30 minutes")
+        .select(col("user_id"), unix_micros(col("ts")).as("ts_us"),
+          col("event_id"), col("value"), col("ts"))
+        .as[SessEvent]
+        .groupByKey(_.user_id)
+        .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.EventTimeTimeout())(
+          sessionizeFn(emitOpen))
+        .toDF()
+    )._1.orderBy("user_id", "session_id")
   }
   /** Oracle for sessionAggStream: DuckDB time_bucket over 1-hour
     * intervals is epoch-aligned for sub-day intervals, matching
@@ -361,8 +402,7 @@ object StreamingJobs {
       |GROUP BY window_start_us, event_type
       |ORDER BY window_start_us, event_type""".stripMargin
 
-  def sessionAggStream(spark: SparkSession, dir: String): DataFrame = withStateParts(spark, dir, "events.parquet") {
-    val sink = s"stream_session_agg_${System.nanoTime()}"
+  def sessionAggStream(spark: SparkSession, dir: String): DataFrame = {
     // file-source streaming needs a directory: stream the sf dir,
     // glob-filtered to the events table. All available files are
     // ingested in ONE batch (maxFilesPerTrigger = None): a WATERMARKED
@@ -373,17 +413,9 @@ object StreamingJobs {
     // the ×10 multi-file corpus, round 14). Per-file incremental
     // delivery is exercised by the chunked, time-ordered spec corpora,
     // which is the only layout it is sound on.
-    val stream = eventsStream(spark, dir, "events.parquet", maxFilesPerTrigger = None)
-    val query = windowAgg(stream)
-      .writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(sink)
-      .start()
-    try {
-      query.processAllAvailable()
-    } finally query.stop()
-    spark.table(sink)
+    toMemory(spark, dir, "events.parquet", "complete")(
+      windowAgg(eventsStream(spark, dir, "events.parquet", maxFilesPerTrigger = None))
+    )._1
       .select(
         unix_micros(col("window.start")).as("window_start_us"),
         col("event_type"), col("n_events"), col("sum_value"))
@@ -399,16 +431,14 @@ object StreamingJobs {
     * enriched event stream, directly comparable to the batch join.
     */
   def enrichStream(spark: SparkSession, dir: String): DataFrame = {
-    val sink = s"stream_enrich_${System.nanoTime()}"
     val dim = broadcast(graft.hmm.Sequencer.vocab(spark, dir))
     // stateless: batch count is delivery detail only; one-batch ingest
     // avoids per-file micro-batches on multi-part corpora (r19)
-    val stream = eventsStream(spark, dir, "events.parquet", maxFilesPerTrigger = None)
-      .select(col("event_id"), col("user_id"), col("ts"), col("event_type"))
-    val query = stream.join(dim, "event_type")
-      .writeStream.outputMode("append").format("memory").queryName(sink).start()
-    try query.processAllAvailable() finally query.stop()
-    spark.table(sink)
+    toMemory(spark, dir, "events.parquet", "append")(
+      eventsStream(spark, dir, "events.parquet", maxFilesPerTrigger = None)
+        .select(col("event_id"), col("user_id"), col("ts"), col("event_type"))
+        .join(dim, "event_type")
+    )._1
       .select(col("event_id"), col("user_id"),
         unix_micros(col("ts")).as("ts_us"), col("event_type"), col("sym"))
       .orderBy("event_id")
@@ -432,19 +462,15 @@ object StreamingJobs {
     * entry uses the deterministic min-aggregate).
     */
   def runDedupWithinWatermark(
-      spark: SparkSession, dir: String, glob: String): DataFrame = withStateParts(spark, dir, glob) {
-    val sink = s"stream_dedup_wm_${System.nanoTime()}"
-    val stream = eventsStream(spark, dir, glob)
-      .select(col("user_id"), col("event_type"), col("ts"))
-      .withWatermark("ts", "30 minutes")
-      .dropDuplicatesWithinWatermark("user_id", "event_type")
-    val query = stream
-      .writeStream.outputMode("append").format("memory").queryName(sink).start()
-    try query.processAllAvailable() finally query.stop()
-    spark.table(sink)
+      spark: SparkSession, dir: String, glob: String): DataFrame =
+    toMemory(spark, dir, glob, "append")(
+      eventsStream(spark, dir, glob)
+        .select(col("user_id"), col("event_type"), col("ts"))
+        .withWatermark("ts", "30 minutes")
+        .dropDuplicatesWithinWatermark("user_id", "event_type")
+    )._1
       .select(col("user_id"), col("event_type"), unix_micros(col("ts")).as("ts_us"))
       .orderBy("user_id", "event_type")
-  }
 
   /** Stream-stream interval join: signups matched to the same user's
     * purchases within the following 2 hours — the attribution join.
@@ -470,8 +496,7 @@ object StreamingJobs {
     */
   def runStreamJoin(
       spark: SparkSession, dir: String, glob: String,
-      maxFilesPerTrigger: Option[Int] = Some(1)): (DataFrame, Seq[Long]) = withStateParts(spark, dir, glob) {
-    val sink = s"stream_join_${System.nanoTime()}"
+      maxFilesPerTrigger: Option[Int] = Some(1)): (DataFrame, Seq[Long]) = {
     def side(tpe: String, pfx: String): DataFrame =
       eventsStream(spark, dir, glob, maxFilesPerTrigger)
         .filter(col("event_type") === tpe)
@@ -483,21 +508,14 @@ object StreamingJobs {
       col("s_user_id") === col("p_user_id") &&
         col("p_ts") >= col("s_ts") &&
         col("p_ts") <= col("s_ts") + expr("INTERVAL 2 HOURS"))
-    val query = joined
-      .writeStream.outputMode("append").format("memory").queryName(sink).start()
-    val states = try {
-      query.processAllAvailable()
-      query.recentProgress.toSeq
-        .filter(_.stateOperators.nonEmpty)
-        .map(_.stateOperators.head.numRowsTotal)
-    } finally query.stop()
-    val out = spark.table(sink)
+    val (rows, progress) = toMemory(spark, dir, glob, "append")(joined)
+    val out = rows
       .select(col("s_user_id").as("user_id"),
         col("s_event_id"), col("p_event_id"),
         unix_micros(col("s_ts")).as("s_ts_us"),
         unix_micros(col("p_ts")).as("p_ts_us"))
       .orderBy("user_id", "s_event_id", "p_event_id")
-    (out, states)
+    (out, stateRows(progress))
   }
 
   val streamJoinSql: String =
@@ -537,44 +555,42 @@ object StreamingJobs {
 
   private[graft] def streamUpsertGlob(
       spark: SparkSession, dir: String, glob: String,
-      maxFilesPerTrigger: Option[Int] = Some(1)): DataFrame = withStateParts(spark, dir, glob) {
+      maxFilesPerTrigger: Option[Int] = Some(1)): DataFrame = {
     // per-invocation nonce: concurrent runs in one JVM never share a
-    // version path; superseded version dirs are deleted as the merge
-    // advances (only the final version survives the run)
+    // version path. The final version is cut to rows, so the whole
+    // target dir goes before returning.
     val base = new java.io.File(System.getProperty("java.io.tmpdir"),
       f"graft_stream_upsert_p${ProcessHandle.current().pid()}_${System.nanoTime()}%x").toString
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("user_id").orderBy(col("ts_us").desc, col("event_id").desc)
-    def keepLatest(df: DataFrame): DataFrame =
-      df.withColumn("rn", row_number().over(w)).filter(col("rn") === 1).drop("rn")
-    var version = 0
-    val stream = eventsStream(spark, dir, glob, maxFilesPerTrigger)
-      // µs BEFORE any ordering so sub-µs tie-breaking can't diverge
-      // from the µs-resolution oracle; event_id is the deterministic tie
-      .select(col("user_id"), col("event_id"), unix_micros(col("ts")).as("ts_us"),
-        col("event_type"), col("value"))
-    val query = stream.writeStream.outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val latest = keepLatest(batch)
-        val merged =
-          if (version == 0) latest
-          else keepLatest(spark.read.parquet(s"$base/v$version").unionByName(latest))
-        merged.write.mode("overwrite").parquet(s"$base/v${version + 1}")
-        version += 1
-        if (version >= 2) { // v{n-1} fully merged into v{n}: delete it
-          def rm(f: java.io.File): Unit = {
-            Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-          }
-          rm(new java.io.File(s"$base/v${version - 1}"))
-        }
-        ()
-      }.start()
-    try query.processAllAvailable() finally query.stop()
-    require(version > 0, "stream produced no microbatches")
-    spark.read.parquet(s"$base/v$version")
+    val (fs, basePath) = upsertFs(spark, base)
+    val target =
+      try {
+        drain(spark, dir, glob)(upsertEvents(spark, dir, glob, maxFilesPerTrigger)
+          .writeStream.outputMode("append")
+          .foreachBatch { (batch: DataFrame, batchId: Long) =>
+            mergeBatch(spark, base, batch, batchId, failBeforeCommitOfBatch = -1L)
+          })
+        graft.Lineage.cut(upsertTarget(spark, base))
+      } finally { fs.delete(basePath, true); () }
+    target
       .select(col("user_id"), col("event_type").as("last_type"),
         col("ts_us").as("last_ts_us"), col("value").as("last_value"))
       .orderBy("user_id")
+  }
+
+  /** The upsert's input rows: µs BEFORE any ordering so sub-µs
+    * tie-breaking can't diverge from the µs-resolution oracle;
+    * event_id is the deterministic tie.
+    */
+  private def upsertEvents(spark: SparkSession, dir: String, glob: String,
+      maxFilesPerTrigger: Option[Int]): DataFrame =
+    eventsStream(spark, dir, glob, maxFilesPerTrigger)
+      .select(col("user_id"), col("event_id"), unix_micros(col("ts")).as("ts_us"),
+        col("event_type"), col("value"))
+
+  private def keepLatest(df: DataFrame): DataFrame = {
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy("user_id").orderBy(col("ts_us").desc, col("event_id").desc)
+    df.withColumn("rn", row_number().over(w)).filter(col("rn") === 1).drop("rn")
   }
 
   /** Streaming trending-items: per 1-hour event-time window, the
@@ -586,20 +602,17 @@ object StreamingJobs {
     * rank runs where the result is read.
     */
   def streamTopk(spark: SparkSession, dir: String, k: Int = 3,
-      glob: String = "events.parquet"): DataFrame = withStateParts(spark, dir, glob) {
-    val sink = s"stream_topk_${System.nanoTime()}"
+      glob: String = "events.parquet"): DataFrame = {
     // one-batch ingest (r19): complete-mode windowed counts are
     // batch-count-invariant (the declared watermark does not evict in
     // complete mode); update-mode cross-batch delivery is
     // streamTopkUpdate's job, which keeps per-file triggers
-    val stream = eventsStream(spark, dir, glob, maxFilesPerTrigger = None)
-    val query = windowAgg(stream)
-      .writeStream.outputMode("complete").format("memory").queryName(sink).start()
-    try query.processAllAvailable() finally query.stop()
+    val counts = toMemory(spark, dir, glob, "complete")(
+      windowAgg(eventsStream(spark, dir, glob, maxFilesPerTrigger = None)))._1
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("window_start_us")
       .orderBy(col("n_events").desc, col("event_type"))
-    spark.table(sink)
+    counts
       .select(unix_micros(col("window.start")).as("window_start_us"),
         col("event_type"), col("n_events"))
       .withColumn("rnk", row_number().over(w))
@@ -621,22 +634,16 @@ object StreamingJobs {
     * update mode into a KV upsert, same as [[streamTopkUpdate]].
     */
   def streamHllDistinct(spark: SparkSession, dir: String,
-      glob: String = "events.parquet"): DataFrame = withStateParts(spark, dir, glob) {
-    val sink = s"stream_hll_${System.nanoTime()}"
+      glob: String = "events.parquet"): DataFrame = {
     // one-batch ingest (r19): register-max HLL state is a pure
     // function of the input set (set-pure registers + canonicalized
     // estimator below), so batch count is irrelevant to content —
     // and 32 per-file micro-batches cost 12.9 s vs ~1 s on the
     // 32-part tier
-    val query = eventsStream(spark, dir, glob, maxFilesPerTrigger = None)
-      .groupBy(col("event_type"))
-      .agg(expr("hll_sketch_agg(user_id, 12)").as("sk"))
-      .writeStream.outputMode("complete").format("memory").queryName(sink).start()
-    try query.processAllAvailable() finally query.stop()
-    // materialize the tiny (O(event-types)) result and DROP the memory
-    // sink before returning: repeated invocations (Bench loops,
-    // StreamScale) must not accumulate cached complete-mode tables in
-    // the shared session catalog (advisor catch, round 13)
+    val sketches = toMemory(spark, dir, glob, "complete")(
+      eventsStream(spark, dir, glob, maxFilesPerTrigger = None)
+        .groupBy(col("event_type"))
+        .agg(expr("hll_sketch_agg(user_id, 12)").as("sk")))._1
     import spark.implicits._
     // Estimate through a self-union: DataSketches HLL REGISTERS are
     // per-bucket maxima (pure function of the input set at any batch
@@ -648,12 +655,11 @@ object StreamingJobs {
     // estimates). hll_union(sk, sk) leaves the registers untouched and
     // forces the composite path — the estimate becomes a pure function
     // of the registers, hence of the input set, at any layout.
-    val rows = spark.table(sink)
+    val rows = sketches
       .select(col("event_type"),
         expr("hll_sketch_estimate(hll_union(sk, sk))").as("approx_users"))
       .orderBy(col("event_type"))
       .as[(String, Long)].collect()
-    spark.catalog.dropTempView(sink)
     rows.toSeq.toDF("event_type", "approx_users").coalesce(1)
       .orderBy(col("event_type"))
   }
@@ -672,9 +678,8 @@ object StreamingJobs {
       spark: SparkSession, dir: String, k: Int = 3,
       glob: String = "events.parquet"): (DataFrame, Seq[Long]) = {
     import spark.implicits._
-    val stream = eventsStream(spark, dir, glob)
     val store = new java.util.concurrent.ConcurrentHashMap[(Long, String), (Long, Double)]()
-    val query = windowAgg(stream)
+    val progress = drain(spark, dir, glob)(windowAgg(eventsStream(spark, dir, glob))
       .select(unix_micros(col("window.start")).as("ws"), col("event_type"),
         col("n_events"), col("sum_value"))
       .writeStream.outputMode("update")
@@ -688,13 +693,7 @@ object StreamingJobs {
           store.put((r.getLong(0), r.getString(1)), (r.getLong(2), r.getDouble(3)))
         }
         ()
-      }.start()
-    val states = try {
-      query.processAllAvailable()
-      query.recentProgress.toSeq
-        .filter(_.stateOperators.nonEmpty)
-        .map(_.stateOperators.head.numRowsTotal)
-    } finally query.stop()
+      })
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("window_start_us")
       .orderBy(col("n_events").desc, col("event_type"))
@@ -704,7 +703,7 @@ object StreamingJobs {
       .withColumn("rnk", row_number().over(w))
       .filter(col("rnk") <= k)
       .orderBy("window_start_us", "rnk")
-    (result, states)
+    (result, stateRows(progress))
   }
 
   /** Streaming SESSION-window aggregation in APPEND mode: sessions
@@ -724,35 +723,27 @@ object StreamingJobs {
   // The watermark-closed session set is deterministic for a finite
   // corpus (its content digest is pinned), and the digest companion
   // query re-ran the WHOLE stream — two full stateful runs per bench
-  // pass / Verify dump. Memoized per (session, corpus, glob); the memo
-  // keeps rows, so the sink view drops right after the run.
+  // pass / Verify dump. Memoized per (session, corpus, glob).
   def sessionWindowStream(spark: SparkSession, dir: String,
       glob: String = "events.parquet"): DataFrame =
     graft.Memo("sessionWindowStream", spark, dir, "events", glob)(
       sessionWindowStreamRun(spark, dir, glob))
 
   private def sessionWindowStreamRun(spark: SparkSession, dir: String,
-      glob: String): DataFrame = withStateParts(spark, dir, glob) {
-    val sink = s"stream_session_window_${System.nanoTime()}"
+      glob: String): DataFrame =
     // one-batch ingest over the unordered corpus directory — the
     // watermark-vs-file-order rule, see sessionAggStream
-    val stream = eventsStream(spark, dir, glob, maxFilesPerTrigger = None)
-    val query = stream
-      .withWatermark("ts", "30 minutes")
-      .groupBy(col("user_id"), session_window(col("ts"), "30 minutes").as("w"))
-      .agg(
-        count(lit(1)).as("n_events"),
-        // hot-user sessions are corpus-magnitude (decimal rule, r16)
-        sum(col("value").cast("decimal(18,4)")).cast("double").as("session_value"))
-      .select(col("user_id"), unix_micros(col("w.start")).as("start_us"),
-        col("n_events"), col("session_value"))
-      .writeStream.outputMode("append").format("memory").queryName(sink).start()
-    try query.processAllAvailable() finally query.stop()
-    // the analyzed plan holds the sink itself, so the view can go now
-    val out = spark.table(sink).orderBy("user_id", "start_us")
-    spark.catalog.dropTempView(sink)
-    out
-  }
+    toMemory(spark, dir, glob, "append")(
+      eventsStream(spark, dir, glob, maxFilesPerTrigger = None)
+        .withWatermark("ts", "30 minutes")
+        .groupBy(col("user_id"), session_window(col("ts"), "30 minutes").as("w"))
+        .agg(
+          count(lit(1)).as("n_events"),
+          // hot-user sessions are corpus-magnitude (decimal rule, r16)
+          sum(col("value").cast("decimal(18,4)")).cast("double").as("session_value"))
+        .select(col("user_id"), unix_micros(col("w.start")).as("start_us"),
+          col("n_events"), col("session_value"))
+    )._1.orderBy("user_id", "start_us")
 
   /** Production deployment shape: the windowed aggregate in APPEND
     * mode against a fault-tolerant PARQUET sink with a reliable
@@ -986,41 +977,42 @@ object StreamingJobs {
   private def checkpointedUpsert(
       spark: SparkSession, srcDir: String, glob: String,
       checkpointDir: String, targetBase: String,
-      failBeforeCommitOfBatch: Long): StreamingQuery = {
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("user_id").orderBy(col("ts_us").desc, col("event_id").desc)
-    def keepLatest(df: DataFrame): DataFrame =
-      df.withColumn("rn", row_number().over(w)).filter(col("rn") === 1).drop("rn")
-    eventsStream(spark, srcDir, glob)
-      .select(col("user_id"), col("event_id"), unix_micros(col("ts")).as("ts_us"),
-        col("event_type"), col("value"))
+      failBeforeCommitOfBatch: Long): StreamingQuery =
+    upsertEvents(spark, srcDir, glob, Some(1))
       .writeStream.outputMode("append")
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val (fs, base) = upsertFs(spark, targetBase)
-        val committed = committedVersionsOf(fs, base)
-        // replay of an ALREADY-committed batch (crash after marker,
-        // before Spark's own commit log): the target is already right
-        if (!committed.contains(batchId)) {
-          val latest = keepLatest(batch)
-          val merged = committed.maxOption match {
-            case None       => latest
-            case Some(prev) => keepLatest(
-              spark.read.parquet(s"$targetBase/v$prev").unionByName(latest))
-          }
-          merged.write.mode("overwrite").parquet(s"$targetBase/v$batchId")
-          if (batchId == failBeforeCommitOfBatch)
-            sys.error(s"injected crash: batch $batchId written but not committed")
-          fs.create(new org.apache.hadoop.fs.Path(
-            s"$targetBase/v$batchId/_GRAFT_COMMIT"), false).close()
-          // GC fully superseded committed versions
-          committed.filter(_ < batchId).foreach { v =>
-            fs.delete(new org.apache.hadoop.fs.Path(s"$targetBase/v$v"), true); ()
-          }
-        }
-        ()
+        mergeBatch(spark, targetBase, batch, batchId, failBeforeCommitOfBatch)
       }
       .start()
+
+  /** The one foreachBatch merge body of both upserts: folds `batch`
+    * into `targetBase/v<batchId>` and commits it (layout and replay
+    * rules on [[startCheckpointedUpsert]]).
+    */
+  private def mergeBatch(spark: SparkSession, targetBase: String,
+      batch: DataFrame, batchId: Long, failBeforeCommitOfBatch: Long): Unit = {
+    val (fs, base) = upsertFs(spark, targetBase)
+    val committed = committedVersionsOf(fs, base)
+    // replay of an ALREADY-committed batch (crash after marker,
+    // before Spark's own commit log): the target is already right
+    if (!committed.contains(batchId)) {
+      val latest = keepLatest(batch)
+      val merged = committed.maxOption match {
+        case None       => latest
+        case Some(prev) => keepLatest(
+          spark.read.parquet(s"$targetBase/v$prev").unionByName(latest))
+      }
+      merged.write.mode("overwrite").parquet(s"$targetBase/v$batchId")
+      if (batchId == failBeforeCommitOfBatch)
+        sys.error(s"injected crash: batch $batchId written but not committed")
+      fs.create(new org.apache.hadoop.fs.Path(
+        s"$targetBase/v$batchId/_GRAFT_COMMIT"), false).close()
+      // GC fully superseded committed versions
+      committed.filter(_ < batchId).foreach { v =>
+        fs.delete(new org.apache.hadoop.fs.Path(s"$targetBase/v$v"), true); ()
+      }
+    }
   }
 
   /** Version discovery for the checkpointed upsert goes through the
@@ -1165,41 +1157,15 @@ object StreamingJobs {
     out.result().iterator
   }
 
-  /** Schema-probed streaming reader over the documents files (same
-    * footer-probe + directory-layout discipline as [[eventsStream]];
-    * no timestamp normalization needed — the schema is declared
-    * verbatim from the probed footers).
-    */
-  private def docsStream(
-      spark: SparkSession, dir: String, glob: String,
-      maxFilesPerTrigger: Option[Int]): DataFrame = {
-    val asDir = new java.io.File(dir, glob)
-    val (readPath, filterOpt) =
-      if (!glob.exists(c => c == '*' || c == '?' || c == '{') && asDir.isDirectory)
-        (asDir.getPath, None)
-      else (dir, Some(glob))
-    val probed =
-      try filterOpt.fold(spark.read)(g => spark.read.option("pathGlobFilter", g))
-        .parquet(readPath).schema
-      catch {
-        case e: org.apache.spark.sql.AnalysisException =>
-          throw new IllegalArgumentException(
-            s"no files matching '$glob' under $dir at stream start", e)
-      }
-    val r0 = spark.readStream.schema(probed)
-    val r1 = maxFilesPerTrigger.fold(r0)(m => r0.option("maxFilesPerTrigger", m.toString))
-    filterOpt.fold(r1)(g => r1.option("pathGlobFilter", g)).parquet(readPath)
-  }
-
   /** Driver-facing run over the replayed corpus; `srcGlob`/`trigger`
     * are injectable for the chunked cross-batch spec.
     */
   def streamDocDedup(spark: SparkSession, dir: String,
       threshold: Double = graft.operators.Dedup.NearDupThreshold,
       srcGlob: String = "documents.parquet",
-      maxFilesPerTrigger: Option[Int] = None): DataFrame = withStateParts(spark, dir, srcGlob) {
+      maxFilesPerTrigger: Option[Int] = None): DataFrame = {
     import spark.implicits._
-    val keyed = docsStream(spark, dir, srcGlob, maxFilesPerTrigger)
+    val keyed = fileStream(spark, dir, srcGlob, maxFilesPerTrigger)
       .filter(col("text").isNotNull)
       .select(col("doc_id"),
         xxhash64(col("text")).as("tk1"),
@@ -1207,36 +1173,30 @@ object StreamingJobs {
         col("text"))
       .as[DocKeyed]
     // stage A: first-seen / exact verdicts
-    val seenSink = s"stream_doc_seen_${System.nanoTime()}"
-    val qa = keyed.groupByKey(d => (d.tk1, d.tk2))
-      .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout())(firstSeenFn)
-      .writeStream.outputMode("append").format("memory").queryName(seenSink).start()
-    try qa.processAllAvailable() finally qa.stop()
+    val seenRows = toMemory(spark, dir, srcGlob, "append")(
+      keyed.groupByKey(d => (d.tk1, d.tk2))
+        .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout())(firstSeenFn)
+        .toDF())._1
     // stage B: band index → candidate pairs (signatures in the typed
     // flatMap via the Scala family mirror — a pre-stateful aggregation
     // is not available in a streaming plan)
-    val candSink = s"stream_doc_cand_${System.nanoTime()}"
-    val qb = keyed
-      .flatMap { d =>
-        val sh = graft.operators.Dedup.shinglesOf(d.text)
-        if (sh.isEmpty) Iterator.empty
-        else graft.operators.Dedup.bandKeysOf(sh).iterator.zipWithIndex
-          .map { case (k, b) => BandDoc(d.doc_id, d.tk1, d.tk2, b, k) }
-      }
-      .groupByKey(b => (b.band, b.bkey))
-      .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout())(bandIndexFn)
-      .writeStream.outputMode("append").format("memory").queryName(candSink).start()
-    try qb.processAllAvailable() finally qb.stop()
-    // materialize both sink relations, then drop the memory-sink views:
-    // repeated invocations in one session (Bench ×3, the layout gate)
-    // must not accumulate driver-resident sink tables and catalog
-    // entries. Cutting HERE (not the final result) keeps the verify/
-    // join compose below a real, auditable plan (PlanAuditSpec
+    val candRows = toMemory(spark, dir, srcGlob, "append")(
+      keyed
+        .flatMap { d =>
+          val sh = graft.operators.Dedup.shinglesOf(d.text)
+          if (sh.isEmpty) Iterator.empty
+          else graft.operators.Dedup.bandKeysOf(sh).iterator.zipWithIndex
+            .map { case (k, b) => BandDoc(d.doc_id, d.tk1, d.tk2, b, k) }
+        }
+        .groupByKey(b => (b.band, b.bkey))
+        .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout())(bandIndexFn)
+        .toDF())._1
+    // cut both sink relations: the sink rows are released with the
+    // sink frames, and cutting HERE (not the final result) keeps the
+    // verify/join compose below a real, auditable plan (PlanAuditSpec
     // fingerprint) instead of a single materialized LogicalRDD.
-    val seen = graft.Lineage.cut(spark.table(seenSink))
-    val candRaw = graft.Lineage.cut(spark.table(candSink))
-    spark.catalog.dropTempView(seenSink)
-    spark.catalog.dropTempView(candSink)
+    val seen = graft.Lineage.cut(seenRows)
+    val candRaw = graft.Lineage.cut(candRows)
     // normalize + dedupe candidates across bands, then exact-verify
     // against the ingested corpus's shingle arrays
     val cand = candRaw

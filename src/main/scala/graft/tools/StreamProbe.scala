@@ -4,15 +4,17 @@ import org.apache.spark.sql.SparkSession
 
 /** Profiling probe for the stateful streaming entries (not part of
   * the driver contract): times a named SparkEntry streaming query
-  * under a sweep of `spark.sql.shuffle.partitions` values — the conf
-  * that pins a streaming query's state-store partition count at
-  * start. Usage:
+  * under a sweep of `graft.stream.statePartitions` values — the
+  * explicit state-store partition count every in-process stream run
+  * starts with (StreamingJobs.withStateParts). Usage:
   *
   *   runMain graft.tools.StreamProbe <sfDir> <query...>
   *
-  * Each (parts, query) cell re-runs the FULL stream (these entries
-  * execute on construction), so the numbers are end-to-end wall
-  * times of the same work at different state layouts.
+  * GRAFT_STREAM_PARTS=<n,n,...> overrides the sweep. Each (parts,
+  * query) cell re-runs the FULL stream (these entries execute on
+  * construction), so the numbers are end-to-end wall times of the same
+  * work at different state layouts; the warm-up run uses the
+  * input-sized default, and the conf is unset after each query's sweep.
   */
 object StreamProbe {
   def main(args: Array[String]): Unit = {
@@ -34,14 +36,14 @@ object StreamProbe {
       // one warm-up run at the session default (parquet IO, JIT)
       fn(spark, dir).write.mode("overwrite").format("noop").save()
       for (p <- sweep) {
-        spark.conf.set("spark.sql.shuffle.partitions", p.toString)
+        spark.conf.set("graft.stream.statePartitions", p.toString)
         spark.sparkContext.setJobDescription(s"streamprobe: $name parts=$p")
         val t0 = System.nanoTime()
         fn(spark, dir).write.mode("overwrite").format("noop").save()
         val sec = (System.nanoTime() - t0) / 1e9
         println(f"[streamprobe] $name%-24s parts=$p%-3d $sec%8.3f s")
       }
-      spark.conf.set("spark.sql.shuffle.partitions", cpus)
+      spark.conf.unset("graft.stream.statePartitions")
     }
     spark.stop()
   }
