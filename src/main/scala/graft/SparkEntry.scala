@@ -141,7 +141,7 @@ object SparkEntry {
       operators.RelationDigest.digest(Dedup.dedupSubstringApply(s, d))),
     // §2.5 similarity search
     "knn_brute" -> ((s: SparkSession, d: String) => Similarity.knnBrute(s, d)),
-    "knn_ivf"   -> Similarity.knnIvfEntry _, // knobs: SPARK_GRAFT_IVF_CLUSTERS / _NPROBE
+    "knn_ivf"   -> ((s: SparkSession, d: String) => Similarity.knnIvf(s, d)),
     "knn_pq"    -> ((s: SparkSession, d: String) => Similarity.knnPq(s, d)),
     "knn_ivf_pq" -> ((s: SparkSession, d: String) => Similarity.knnIvfPq(s, d)),
     // round 14: the index as a persisted artifact — build, write the

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -26,25 +25,7 @@ object Verify {
         case Some(t) => SparkEntry.pinnedOnlyWithoutTier(t)
         case None    => Set.empty
       }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    // GRAFT_CONF="k=v;k=v": extra session confs, applied LAST. The
-    // layout-differential gate (tools/layout_gate.sh) uses this to run
-    // the whole surface under an adversarial execution layout (odd
-    // parallelism, AQE off, auto-broadcast off, tiny input splits,
-    // interpreted expressions) — outputs must be bit-identical to the
-    // standard run's, or the query is layout-sensitive.
-    sys.env.get("GRAFT_CONF").foreach(_.split(';').filter(_.nonEmpty).foreach { kv =>
-      require(kv.contains("="), s"bad GRAFT_CONF entry (expected key=value): '$kv'")
-      val Array(k, v) = kv.split("=", 2)
-      builder.config(k.trim, v.trim)
-    })
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession("graft-verify")
     new java.io.File(outDir).mkdirs()
     // timestamp-sanity tripwire, BEFORE any query runs: a misread ts
     // encoding can produce plausible-looking wrong answers (the

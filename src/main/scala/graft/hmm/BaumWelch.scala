@@ -240,7 +240,7 @@ object BaumWelch {
       epsilon: Double = 1e-4,
       checkpointDir: Option[String] = None,
       resume: Boolean = false): FitResult = {
-    lazy val spark = org.apache.spark.sql.SparkSession.builder().getOrCreate()
+    lazy val spark = org.apache.spark.sql.SparkSession.active
     val chain = new Chain(init)
     if (resume) checkpointDir.flatMap(latestCheckpoint(spark, _)).foreach {
       case (ckptIter, ckptPath) =>

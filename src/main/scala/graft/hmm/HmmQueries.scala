@@ -92,10 +92,8 @@ object HmmQueries {
   // -------------------------------------------------------------------
 
   def modelIo(spark: SparkSession, dir: String): DataFrame = {
-    // overwrite mode so repeated runs reuse one dir instead of leaking
-    // temp dirs; keyed by (input dir, process) so concurrent gate runs
-    // over different datasets never interleave overwrite-and-read
-    val path = scratch("graft_hmm_model_io", dir)
+    // overwrite mode: repeated runs reuse one scratch dir
+    val path = graft.ScratchDir("graft_hmm_model_io", spark, dir)
     val v = Sequencer.vocab(spark, dir)
       .select(col("sym").cast("long").as("j"), col("event_type"))
     val named = supervised(spark, dir)
@@ -447,18 +445,13 @@ object HmmQueries {
       .orderBy("user_id", "step")
   }
 
-  private def scratch(name: String, dir: String): String =
-    new java.io.File(
-      System.getProperty("java.io.tmpdir"),
-      f"${name}_${(dir.hashCode & 0x7fffffff)}%x_p${ProcessHandle.current().pid()}").toString
-
   /** CLI training driver surface (reference BaumWelchDriver.java CLI):
     * trains on the events table via TrainHmm.run and dumps the written
     * named-model directory. Pinned-literal oracle since r11 (the
     * fixed-point E-step makes the trained model deterministic).
     */
   def trainCli(spark: SparkSession, dir: String): DataFrame = {
-    val out = scratch("graft_train_cli", dir)
+    val out = graft.ScratchDir("graft_train_cli", spark, dir)
     TrainHmm.run(spark, TrainHmm.Config(
       input = dir, output = out, numStates = 3,
       maxIterations = 5, restarts = 2, seed = 42L))
@@ -478,7 +471,7 @@ object HmmQueries {
     import spark.implicits._
     // the first fit below is a fresh run (resume=false), which clears
     // any stale model-N dirs itself
-    val ckpt = scratch("graft_bw_ckpt", dir)
+    val ckpt = graft.ScratchDir("graft_bw_ckpt", spark, dir)
     val names = vocabNames(spark, dir)
     val seqs = Sequencer.sequenceDs(spark, dir).map(_._2.toArray).rdd.cache()
     try {

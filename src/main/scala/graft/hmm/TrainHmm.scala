@@ -19,6 +19,11 @@ import org.apache.spark.sql.SparkSession
   *     [--trainer baumwelch|viterbi] [--pseudo-count C]
   *     [--input-format events|seqfile]
   *     [--model-in DIR] [--checkpoint-dir DIR] [--resume]
+  *
+  * `main` runs on [[graft.LocalSession]]: `local[SPARK_GRAFT_CPUS]`
+  * (default: every core) in the UTC time zone the events reader
+  * assumes; another master or conf goes through GRAFT_CONF, e.g.
+  * `GRAFT_CONF="spark.master=spark://host:7077"`.
   */
 object TrainHmm {
 
@@ -201,14 +206,7 @@ object TrainHmm {
 
   def main(args: Array[String]): Unit = {
     val cfg = parse(args.toSeq)
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[*]"))
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.ui.enabled", "false")
-      .appName("graft-train-hmm")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.LocalSession("graft-train-hmm")
     try {
       val res = run(spark, cfg)
       println(s"converged=${res.converged} iterations=${res.iterations} " +

@@ -179,7 +179,9 @@ object Classifier {
 
   private[graft] def qualityLrFor(
       docs: DataFrame, memoKey: Option[String], iters: Int = 8): DataFrame = {
-    val feats = featureDf(docs).cache()
+    // no cache: `train` caches (and unpersists) its own copy, and a
+    // cached frame here would stay in the CacheManager for the session
+    val feats = featureDf(docs)
     def fit() = train(feats, iters)
     val result = memoKey match {
       case Some(key) => modelCache.computeIfAbsent(s"$key|$iters", _ => fit())

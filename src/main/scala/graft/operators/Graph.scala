@@ -59,8 +59,9 @@ object Graph {
     // amortize away at real scale. Per-iteration eager cuts keep the
     // plan O(1) and measured no slower than periodic cuts here.
     //
-    // AQE stays ON in the loop (r19 experiment, abandoned): LoopProbe
-    // measured 0.54 -> 0.45 s/iteration with AQE off, but entry-level
+    // AQE stays ON in the loop (r19 experiment, abandoned): a loop
+    // probe (now `GRAFT_CONF=spark.sql.adaptive.enabled=false
+    // graft.tools.Profile <sf> <out> pagerank`) measured 0.54 -> 0.45 s/iteration with AQE off, but entry-level
     // runs of the change landed 12-28 s — readings taken as the host
     // degraded ~4x (ambient load 4->9; CLAUDE.md 5x-noise rule), so
     // the regression could not be separated from contention and the

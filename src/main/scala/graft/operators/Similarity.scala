@@ -203,19 +203,6 @@ object Similarity {
     } finally e.unpersist()
   }
 
-  /** The `knn_ivf` driver entry with the index knobs exposed through
-    * the environment — SPARK_GRAFT_IVF_CLUSTERS / SPARK_GRAFT_IVF_NPROBE
-    * tune the recall/cost point without a code change (nprobe = K
-    * degenerates to an exhaustive, brute-equivalent search; the recall
-    * curve on this corpus is documented in DedupSimilaritySpec).
-    */
-  def knnIvfEntry(spark: SparkSession, dir: String): DataFrame = {
-    val clusters = sys.env.get("SPARK_GRAFT_IVF_CLUSTERS").map(_.toInt).getOrElse(8)
-    val nprobe = sys.env.get("SPARK_GRAFT_IVF_NPROBE").map(_.toInt).getOrElse(2)
-    require(clusters > 0 && nprobe > 0, "IVF knobs must be positive")
-    knnIvf(spark, dir, numClusters = clusters, nprobe = math.min(nprobe, clusters))
-  }
-
   /** Int8 scalar-quantization audit: per vector, symmetric per-vector
     * quantization (scale = max|x| / 127, q_i = round(x_i / scale)),
     * reporting the scale, an order-sensitive integer checksum of the
@@ -571,13 +558,8 @@ object Similarity {
 
   /** The persisted-index location for (session, corpus) — exposed so
     * the spec can assert the artifact layout on disk. */
-  private[graft] def annIndexScratchDir(spark: SparkSession, dir: String): String = {
-    val tag = java.security.MessageDigest.getInstance("MD5")
-      .digest(s"$dir|${graft.SessionKey(spark)}".getBytes("UTF-8"))
-      .map(b => f"$b%02x").mkString.take(16)
-    new java.io.File(System.getProperty("java.io.tmpdir"),
-      s"graft_ann_idx_${tag}_p${ProcessHandle.current().pid()}").toString
-  }
+  private[graft] def annIndexScratchDir(spark: SparkSession, dir: String): String =
+    graft.ScratchDir("graft_ann_idx", spark, dir)
 
   private val ivfPqCoarseCache =
     new java.util.concurrent.ConcurrentHashMap[String, Array[Seq[Double]]]()

@@ -50,19 +50,10 @@ object Sketches {
   def hllCube(spark: SparkSession, dir: String): DataFrame = {
     val ev = Tables.events(spark, dir)
       .select(col("event_type"), to_date(col("ts")).as("day"), col("user_id"))
-    // scratch path keyed by (corpus dir, pid, SESSION) and REUSED
-    // across calls (overwrite mode), same discipline as Formats.tmp:
-    // repeated bench passes must not accumulate one orphan dir per
-    // invocation, and two sessions in one JVM querying the same corpus
-    // must not race on a shared overwrite-then-read dir (the same
-    // class of bug as the (session, dir) memoization rule — advisor
-    // catch, round 13). The session id is minted once per session
-    // object and stable for its lifetime.
-    val tag = java.security.MessageDigest.getInstance("MD5")
-      .digest(s"$dir|${graft.SessionKey(spark)}".getBytes("UTF-8"))
-      .map(b => f"$b%02x").mkString.take(16)
-    val cubeDir = new java.io.File(System.getProperty("java.io.tmpdir"),
-      s"graft_hll_cube_${tag}_p${ProcessHandle.current().pid()}").toString
+    // one scratch dir per (session, corpus), REUSED across calls
+    // (overwrite mode): repeated bench passes must not accumulate one
+    // orphan dir per invocation
+    val cubeDir = graft.ScratchDir("graft_hll_cube", spark, dir)
     ev.groupBy(col("event_type"), col("day"))
       .agg(expr(s"hll_sketch_agg(user_id, $HllLgK)").as("sk"))
       .write.mode("overwrite").parquet(cubeDir)

@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.ScratchDir
 
 /** Source/sink format coverage: CSV and JSON round trips with
   * explicit schemas (never inference — inference drifts types), and a
@@ -10,19 +11,6 @@ import org.apache.spark.sql.functions._
   */
 object Formats {
 
-  /** Scratch dir keyed by (input dir, process): concurrent gate runs
-    * over different datasets (sf0.001 fast loop alongside sf0.01
-    * verify) must not interleave overwrite-and-read on one path.
-    */
-  private def tmp(name: String, dir: String): String = {
-    // md5-keyed like the catalog tables below: distinct dirs must
-    // never map to the same scratch path
-    val tag = java.security.MessageDigest.getInstance("MD5")
-      .digest(dir.getBytes("UTF-8")).map(b => f"$b%02x").mkString.take(16)
-    new java.io.File(System.getProperty("java.io.tmpdir"),
-      s"${name}_${tag}_p${ProcessHandle.current().pid()}").toString
-  }
-
   /** customer → CSV → (schema-checked read) → JSON → read → dump.
     * Hash-equality with the original table proves both text formats
     * round-trip losslessly under explicit schemas.
@@ -30,8 +18,8 @@ object Formats {
   def formatRoundtrip(spark: SparkSession, dir: String): DataFrame = {
     val orig = Tables.customer(spark, dir)
     val schema = orig.schema
-    val csvPath = tmp("graft_fmt_csv", dir)
-    val jsonPath = tmp("graft_fmt_json", dir)
+    val csvPath = ScratchDir("graft_fmt_csv", spark, dir)
+    val jsonPath = ScratchDir("graft_fmt_json", spark, dir)
     orig.write.mode("overwrite").option("header", "true").csv(csvPath)
     val fromCsv = spark.read.schema(schema).option("header", "true").csv(csvPath)
     fromCsv.write.mode("overwrite").json(jsonPath)
@@ -48,7 +36,7 @@ object Formats {
     * unpartitioned original.
     */
   def sinkPartitioned(spark: SparkSession, dir: String): DataFrame = {
-    val path = tmp("graft_sink_part", dir)
+    val path = ScratchDir("graft_sink_part", spark, dir)
     Tables.lineitem(spark, dir)
       .select("l_orderkey", "l_quantity", "l_extendedprice", "l_returnflag")
       .write.mode("overwrite").partitionBy("l_returnflag").parquet(path)
@@ -84,12 +72,12 @@ object Formats {
         .select("o_orderkey", "o_orderpriority", "o_totalprice")
         .write.mode("overwrite")
         .bucketBy(8, "o_orderkey").sortBy("o_orderkey")
-        .option("path", tmp("graft_bkt_orders", dir)).saveAsTable(ot)
+        .option("path", ScratchDir("graft_bkt_orders", spark, dir)).saveAsTable(ot)
       Tables.lineitem(spark, dir)
         .select("l_orderkey", "l_extendedprice", "l_discount")
         .write.mode("overwrite")
         .bucketBy(8, "l_orderkey").sortBy("l_orderkey")
-        .option("path", tmp("graft_bkt_lineitem", dir)).saveAsTable(lt)
+        .option("path", ScratchDir("graft_bkt_lineitem", spark, dir)).saveAsTable(lt)
     }
     // merge hint: the point is the exchange-free sort-merge join, not
     // a broadcast that would happen to fit at test scale
@@ -139,8 +127,8 @@ object Formats {
     * repartition) fails the driver hash, not just a spec.
     */
   def compactFiles(spark: SparkSession, dir: String): DataFrame = {
-    val src = tmp("graft_compact_src", dir)
-    val dst = tmp("graft_compact_dst", dir)
+    val src = ScratchDir("graft_compact_src", spark, dir)
+    val dst = ScratchDir("graft_compact_dst", spark, dir)
     Tables.lineitem(spark, dir)
       .select("l_orderkey", "l_quantity", "l_extendedprice", "l_returnflag")
       .repartition(64) // the fragmented as-ingested layout
@@ -176,7 +164,7 @@ object Formats {
     * stripe-level min/max skip, same as parquet row groups.
     */
   def orcRoundtrip(spark: SparkSession, dir: String): DataFrame = {
-    val path = tmp("graft_fmt_orc", dir)
+    val path = ScratchDir("graft_fmt_orc", spark, dir)
     Tables.orders(spark, dir).write.mode("overwrite").orc(path)
     spark.read.orc(path)
       .filter(col("o_totalprice") > 250000.0)
@@ -202,7 +190,7 @@ object Formats {
     */
   def csvBadRecords(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.types._
-    val path = tmp("graft_fmt_badcsv", dir)
+    val path = ScratchDir("graft_fmt_badcsv", spark, dir)
     Tables.customer(spark, dir)
       .select(concat_ws(",",
         col("c_custkey"),
@@ -244,7 +232,7 @@ object Formats {
     * oracle.
     */
   def schemaEvolution(spark: SparkSession, dir: String): DataFrame = {
-    val path = tmp("graft_fmt_evo", dir)
+    val path = ScratchDir("graft_fmt_evo", spark, dir)
     val orders = Tables.orders(spark, dir)
     orders.filter(col("o_orderkey") % 3 =!= 0)
       .select(col("o_orderkey"), col("o_totalprice"))

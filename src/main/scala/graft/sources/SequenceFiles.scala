@@ -126,7 +126,7 @@ object SequenceFiles {
     * ids, lengths, symbols, AND order.
     */
   def roundtrip(spark: SparkSession, dir: String): DataFrame = {
-    val path = tmpDir("graft_seqfile", dir, spark)
+    val path = graft.ScratchDir("graft_seqfile", spark, dir)
     val p = new Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(p)) fs.delete(p, true) // rerun in-process: overwrite
@@ -165,16 +165,4 @@ object SequenceFiles {
        |  CAST(arg_max(sym, pos1) AS BIGINT) AS last_sym,
        |  CAST(sum(CAST(sym AS BIGINT) * pos1) AS BIGINT) AS checksum
        |FROM s GROUP BY user_id ORDER BY seq_id""".stripMargin
-
-  private def tmpDir(name: String, dir: String, spark: SparkSession): String = {
-    // keyed per (source dir, pid, SESSION) — the repo's persisted-
-    // DataFrame memoization rule: two sessions (or threads with their
-    // own sessions) in one JVM must not share a scratch dir they
-    // delete-and-rewrite, or one clobbers the other's files mid-read
-    val tag = java.security.MessageDigest.getInstance("MD5")
-      .digest(dir.getBytes("UTF-8")).map(b => f"$b%02x").mkString.take(16)
-    new java.io.File(System.getProperty("java.io.tmpdir"),
-      s"${name}_${tag}_p${ProcessHandle.current().pid()}" +
-        s"_s${System.identityHashCode(spark)}").toString
-  }
 }

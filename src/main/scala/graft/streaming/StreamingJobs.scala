@@ -145,8 +145,9 @@ object StreamingJobs {
     * checkpoint across restarts, and the recovery specs drive those
     * with explicit session conf.
     *
-    * Measured (StreamProbe, sf0.1, local[32], shuffle.partitions
-    * sweep 32→1): every stateful entry runs 1.4-2× faster at 1
+    * Measured (sf0.1, local[32], shuffle.partitions sweep 32→1;
+    * reproduce with graft.tools.Profile under
+    * GRAFT_CONF=graft.stream.statePartitions=<p>, one run per value): every stateful entry runs 1.4-2× faster at 1
     * partition than at 32 on the 2 MB replay (stream_join 4.0→2.9 s,
     * sessionize 4.5→2.3 s, doc_dedup 8.1→4.6 s, topk 2.7→1.4 s,
     * session_agg 2.8→1.3 s, dedup 3.1→1.5 s) — per-partition

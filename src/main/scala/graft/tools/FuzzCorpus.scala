@@ -2,7 +2,6 @@ package graft.tools
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
-import org.apache.spark.sql.SparkSession
 
 /** Adversarial-content differential-fuzz corpus (round-12 verdict
   * item 4): the text/dedup/curation family is oracle-verified only on
@@ -113,7 +112,6 @@ object FuzzCorpus {
   def main(args: Array[String]): Unit = {
     val base = args.lift(0).getOrElse("/root/testdata/sf0.001")
     val out  = args.lift(1).getOrElse("/tmp/graft_fuzz")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
     Files.createDirectories(Paths.get(out))
     // byte-copy every non-documents table (driver tiers store one file
     // per table) so joins, the events tripwire, and the content-
@@ -123,13 +121,7 @@ object FuzzCorpus {
       Files.copy(Paths.get(s"$base/$t.parquet"), Paths.get(s"$out/$t.parquet"),
         StandardCopyOption.REPLACE_EXISTING)
     }
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.LocalSession("graft-fuzz-corpus")
     import spark.implicits._
     docs.toDF().coalesce(1).write.mode("overwrite").parquet(s"$out/documents.parquet")
     System.err.println(s"[fuzz] wrote ${docs.size} adversarial documents to $out")

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 
 import graft.PinnedOracles
 
@@ -43,10 +42,7 @@ object PinGen {
     (if (new java.io.File(Sfx10Dir).isDirectory &&
          !sys.env.get("GRAFT_PIN_NO_SFX10").contains("1")) Seq(5 -> Sfx10Dir) else Nil)
 
-  /** Queries whose outputs are deterministic by construction.
-    * knn_ivf's pin captures the DEFAULT index knobs — running the
-    * driver with SPARK_GRAFT_IVF_CLUSTERS/_NPROBE set changes the
-    * query output and would (correctly) fail its pinned oracle. */
+  /** Queries whose outputs are deterministic by construction. */
   val targets: Seq[String] = Seq(
     "bpe_train", "hmm_random_model", "hmm_model_from_distributions",
     "hmm_stationary", "approx_stats",
@@ -121,14 +117,7 @@ object PinGen {
   def main(args: Array[String]): Unit = {
     // abort a doomed WRITE before the capture pass, not after it
     if (!args.headOption.forall(_ == "--dump")) requireTierCorpora()
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.LocalSession("graft-pin-gen")
 
     val captured: Seq[(String, Seq[(String, String)], Map[Int, Seq[String]])] =
       targets.map { name =>

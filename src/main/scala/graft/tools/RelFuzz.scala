@@ -94,7 +94,6 @@ object RelFuzz {
   def main(args: Array[String]): Unit = {
     val base = args.lift(0).getOrElse("/root/testdata/sf0.001")
     val out  = args.lift(1).getOrElse("/tmp/graft_relfuzz")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
     Files.createDirectories(Paths.get(out))
     // byte-copy the tables this tool does not perturb
     Seq("region", "nation", "part", "documents")
@@ -102,13 +101,7 @@ object RelFuzz {
         Files.copy(Paths.get(s"$base/$t.parquet"), Paths.get(s"$out/$t.parquet"),
           StandardCopyOption.REPLACE_EXISTING)
       }
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.LocalSession("graft-relfuzz")
     import spark.implicits._
 
     // ---- events ------------------------------------------------------

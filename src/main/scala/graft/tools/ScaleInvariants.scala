@@ -52,14 +52,7 @@ object ScaleInvariants {
     val baseDir   = args.lift(0).getOrElse("/root/testdata/sf0.1")
     val scaledDir = args.lift(1).getOrElse("/tmp/graft_sfx1")
     val copies    = args.lift(2).map(_.toInt).getOrElse(10)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.LocalSession("graft-scale-invariants")
     val results = run(spark, baseDir, scaledDir, copies)
     results.foreach {
       case (name, Pass)         => println(s"PASS $name")

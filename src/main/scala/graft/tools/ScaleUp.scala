@@ -59,14 +59,7 @@ object ScaleUp {
     val out    = args.lift(1).getOrElse("/tmp/graft_sfx1")
     val copies = args.lift(2).map(_.toInt).getOrElse(10)
     val skew   = args.contains("--skew")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.LocalSession("graft-scale-up")
     scale(spark, base, out, copies, skew)
     spark.stop()
   }

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.sources.Tables
@@ -35,14 +34,7 @@ object SkewAudit {
 
   def main(args: Array[String]): Unit = {
     val dir = args.lift(0).getOrElse("/tmp/graft_skew")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.LocalSession("graft-skew-audit")
     var fails = 0
     def check(name: String)(body: => Either[String, String]): Unit = {
       val t0 = System.nanoTime()

@@ -2,7 +2,6 @@ package graft.tools
 
 import scala.collection.mutable.ArrayBuffer
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.StreamingQueryListener
 
 /** Scaled-tier streaming characterization (round-12 verdict item 2):
@@ -37,14 +36,7 @@ object StreamScale {
 
   def main(args: Array[String]): Unit = {
     val dir = args.lift(0).getOrElse("/tmp/graft_sfx1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.LocalSession("graft-stream-scale")
 
     final case class Batch(inputRows: Long, stateRows: Option[Long])
     val batches = ArrayBuffer.empty[Batch]

@@ -95,7 +95,7 @@ case class CharWindows(child: Expression, n: Int)
   * (the apply path is contracted), and the per-call work is a byte
   * loop over the whole document — interpreted dispatch is nanoseconds
   * against that. dedup_substring_apply's warm end-to-end cost at
-  * sf0.1 is 0.25 s (SubstringProfile), so a doGenCode would shave an
+  * sf0.1 is 0.25 s (`graft.tools.Profile … dedup_substring_apply`), so a doGenCode would shave an
   * unmeasurable slice while adding a second implementation of the
   * span-cursor loop to keep correct.
   */

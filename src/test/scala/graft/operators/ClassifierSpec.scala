@@ -50,4 +50,14 @@ class ClassifierSpec extends AnyFunSuite {
     info(f"good avg score $gAvg%.3f vs degenerate avg $bAvg%.3f")
     assert(gAvg > bAvg + 0.3, f"no separation: good $gAvg%.3f vs bad $bAvg%.3f")
   }
+
+  test("qualityLr on a fresh corpus leaves no cached relation behind") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_lr_cache").toString
+    Tables.documents(spark, sfDir).coalesce(1).write.mode("overwrite")
+      .parquet(s"$dir/documents.parquet")
+    Classifier.qualityLr(spark, dir).collect()
+    assert(Classifier.featureDf(Tables.documents(spark, dir)).storageLevel ==
+      org.apache.spark.storage.StorageLevel.NONE,
+      "qualityLr left its feature frame in the CacheManager")
+  }
 }
