@@ -174,14 +174,20 @@ object Classifier {
     * r11 (fixed-point Newton accumulation; one memoized model per
     * process) — carries a pinned-literal oracle.
     */
-  def qualityLr(spark: SparkSession, dir: String): DataFrame =
-    qualityLrFor(Tables.documents(spark, dir), Some(Tables.contentKey(spark, dir, "documents")))
+  def qualityLr(spark: SparkSession, dir: String): DataFrame = {
+    // the features are read by training AND by every scoring pass, so
+    // they are kept as memo rows (not a CacheManager entry): the first
+    // pass computes the corpus filter once, later passes read the cut
+    val feats = graft.Memo("qualityLrFeatures", spark, dir, "documents")(
+      featureDf(Tables.documents(spark, dir)))
+    scored(feats, Some(Tables.contentKey(spark, dir, "documents")))
+  }
 
   private[graft] def qualityLrFor(
-      docs: DataFrame, memoKey: Option[String], iters: Int = 8): DataFrame = {
-    // no cache: `train` caches (and unpersists) its own copy, and a
-    // cached frame here would stay in the CacheManager for the session
-    val feats = featureDf(docs)
+      docs: DataFrame, memoKey: Option[String], iters: Int = 8): DataFrame =
+    scored(featureDf(docs), memoKey, iters)
+
+  private def scored(feats: DataFrame, memoKey: Option[String], iters: Int = 8): DataFrame = {
     def fit() = train(feats, iters)
     val result = memoKey match {
       case Some(key) => modelCache.computeIfAbsent(s"$key|$iters", _ => fit())

@@ -52,7 +52,7 @@ class ClassifierSpec extends AnyFunSuite {
   }
 
   test("qualityLr on a fresh corpus leaves no cached relation behind") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_lr_cache").toString
+    val dir = graft.ScratchDir("graft_lr_cache", spark, sfDir)
     Tables.documents(spark, sfDir).coalesce(1).write.mode("overwrite")
       .parquet(s"$dir/documents.parquet")
     Classifier.qualityLr(spark, dir).collect()
