@@ -126,16 +126,11 @@ object HmmQueries {
   // forward pass). Counts collected to the driver are O(K² + K·M).
   // -------------------------------------------------------------------
 
-  // Memoized per (events content, smooth): every model-driven query
-  // needs the same deterministic supervised model — train once per
-  // process, not once per query (saves two shuffles + a collect per
-  // query); a rewritten events table is a miss, never a stale model.
-  private val modelCache =
-    new java.util.concurrent.ConcurrentHashMap[String, HmmModel]()
-
+  // Every model-driven query needs the same deterministic supervised
+  // model: train once per (session, events content), not once per
+  // query (saves two shuffles + a collect per query).
   def trainSupervisedModel(spark: SparkSession, dir: String, smooth: Double = 0.5): HmmModel =
-    modelCache.computeIfAbsent(s"${graft.sources.Tables.contentKey(spark, dir, "events")}|$smooth",
-      _ => trainUncached(spark, dir, smooth))
+    graft.Memo.value("hmmModel", spark, dir, "events", smooth)(trainUncached(spark, dir, smooth))
 
   private def trainUncached(spark: SparkSession, dir: String, smooth: Double): HmmModel = {
     val rows = supervised(spark, dir).collect()

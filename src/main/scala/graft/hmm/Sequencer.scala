@@ -23,10 +23,10 @@ import graft.sources.Tables
 object Sequencer {
 
   /** One (session, corpus)'s vocabulary and sequences, built lazily
-    * (the cache's computeIfAbsent only allocates). `vocab` is the
+    * (the memo's computeIfAbsent only allocates). `vocab` is the
     * sorted distinct event types, ordered as Spark orders strings
     * (UTF-8 binary, nulls first); a type's symbol id is its index. */
-  private final class Entry(val spark: SparkSession, dir: String) {
+  private final class Entry(spark: SparkSession, dir: String) {
     lazy val vocab: Array[String] = {
       val types = Tables.events(spark, dir).select("event_type").distinct()
         .collect().map(_.getString(0))
@@ -37,7 +37,8 @@ object Sequencer {
       * equi-join on the vocab would drop them. */
     lazy val symbols: Map[String, Int] =
       vocab.iterator.zipWithIndex.filter(_._1 != null).toMap
-    /** Persisted: every model-driven HMM query iterates the same
+    /** Persisted, the library's one CacheManager entry (see
+      * [[graft.Memo]]): every model-driven HMM query iterates the same
       * sequences, and the build (the pipeline's one wide op) should run
       * once per dataset, not once per query — exactly how an EM driver
       * would cache its input on a cluster. */
@@ -50,19 +51,8 @@ object Sequencer {
     else if (y == null) 1
     else UTF8String.fromString(x).compareTo(UTF8String.fromString(y))
 
-  /** Keyed by (session, corpus content): the persisted Dataset is bound
-    * to its session's context, and a regenerated `events` table must
-    * not be served the old vocabulary. Entries of stopped contexts are
-    * swept on access. */
-  private val seqCache = new java.util.concurrent.ConcurrentHashMap[String, Entry]()
-
-  private def entry(spark: SparkSession, dir: String): Entry = {
-    val it = seqCache.values().iterator()
-    while (it.hasNext) if (it.next().spark.sparkContext.isStopped) it.remove()
-    seqCache.computeIfAbsent(
-      s"${graft.SessionKey(spark)}|${Tables.contentKey(spark, dir, "events")}",
-      _ => new Entry(spark, dir))
-  }
+  private def entry(spark: SparkSession, dir: String): Entry =
+    graft.Memo.value("sequences", spark, dir, "events")(new Entry(spark, dir))
 
   /** event_type → contiguous symbol id, deterministic (ordered by
     * event_type): a local relation over the cached vocabulary.

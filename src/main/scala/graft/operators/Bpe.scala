@@ -65,17 +65,10 @@ object Bpe {
       .orderBy("step")
   }
 
-  // Learned merges are pure data — memoized per (dir, merges) like
-  // the supervised HMM model, so train/apply queries share one
-  // training pass per process.
-  private val mergeCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[(Int, String, String, Long)]]()
-
   private[graft] def learnedFor(
       spark: SparkSession, dir: String, merges: Int): Seq[(Int, String, String, Long)] =
-    mergeCache.computeIfAbsent(
-      s"${Tables.contentKey(spark, dir, "documents")}|$merges", _ =>
-        learnMerges(Tables.documents(spark, dir), merges))
+    graft.Memo.value("bpeMerges", spark, dir, "documents", merges)(
+      learnMerges(Tables.documents(spark, dir), merges))
 
   private[graft] def bpeTrainFor(docs: DataFrame, merges: Int): DataFrame = {
     val spark = docs.sparkSession

@@ -164,15 +164,10 @@ object Classifier {
     TrainResult(w, losses)
   }
 
-  // Weights are pure data — memoized per documents content like the
-  // HMM model.
-  private val modelCache =
-    new java.util.concurrent.ConcurrentHashMap[String, TrainResult]()
-
   /** Driver query: per-document smooth quality score against the
     * rule label it was distilled from. Bitwise deterministic since
     * r11 (fixed-point Newton accumulation; one memoized model per
-    * process) — carries a pinned-literal oracle.
+    * session and corpus) — carries a pinned-literal oracle.
     */
   def qualityLr(spark: SparkSession, dir: String): DataFrame = {
     // the features are read by training AND by every scoring pass, so
@@ -180,20 +175,16 @@ object Classifier {
     // pass computes the corpus filter once, later passes read the cut
     val feats = graft.Memo("qualityLrFeatures", spark, dir, "documents")(
       featureDf(Tables.documents(spark, dir)))
-    scored(feats, Some(Tables.contentKey(spark, dir, "documents")))
+    scored(feats, graft.Memo.value("qualityLrModel", spark, dir, "documents")(train(feats).weights))
   }
 
-  private[graft] def qualityLrFor(
-      docs: DataFrame, memoKey: Option[String], iters: Int = 8): DataFrame =
-    scored(featureDf(docs), memoKey, iters)
+  private[graft] def qualityLrFor(docs: DataFrame): DataFrame = {
+    val feats = featureDf(docs)
+    scored(feats, train(feats).weights)
+  }
 
-  private def scored(feats: DataFrame, memoKey: Option[String], iters: Int = 8): DataFrame = {
-    def fit() = train(feats, iters)
-    val result = memoKey match {
-      case Some(key) => modelCache.computeIfAbsent(s"$key|$iters", _ => fit())
-      case None      => fit()
-    }
-    val wCol = typedLit(result.weights.toSeq)
+  private def scored(feats: DataFrame, weights: Array[Double]): DataFrame = {
+    val wCol = typedLit(weights.toSeq)
     feats
       .withColumn("z", aggregate(
         zip_with(col("x"), wCol, (a, b) => a * b),

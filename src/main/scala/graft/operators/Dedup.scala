@@ -422,7 +422,11 @@ object Dedup {
       rounds += 1
     }
     edges.unpersist()
-    (labels.select(col("id").as("doc_id"), col("label").as("canonical_id")), rounds)
+    // the last round's rows become a cut, so the cached step is released
+    val out = graft.Lineage.cut(labels.select(col("id").as("doc_id"), col("label").as("canonical_id")))
+    labels.unpersist()
+    labelLoop.drop(pairs.sparkSession)
+    (out, rounds)
   }
 
   /** Rounds of plain propagation before engaging the pointer-jump
@@ -444,12 +448,13 @@ object Dedup {
     * family), and THREE operators consume its labels (dedup_groups,
     * curate_corpus via dispositionsFor, corpus_emit) — before r18
     * each re-ran the loop. Keyed (session, corpus, τ) like the other
-    * memoized relations; the memo's cut severs the loop's
-    * thousand-node plan so consumers join against rows.
+    * memoized relations. The labels are already a cut, which severs
+    * the loop's thousand-node plan so consumers join against rows, so
+    * the memo keeps them as a value rather than cutting them again.
     */
   private[operators] def ccLabelsFor(spark: SparkSession, dir: String,
       threshold: Double): DataFrame =
-    Memo("ccLabels", spark, dir, "documents", threshold)(
+    Memo.value("ccLabels", spark, dir, "documents", threshold)(
       connectedComponentsFor(repPairsFor(spark, dir, threshold).select("a_id", "b_id"))._1)
 
   /** Contracted (round 14): components are computed on the REP graph —
@@ -1419,7 +1424,7 @@ object Dedup {
     val n = e.count()
     val k = math.max(1, math.min(256, (n / 8).toInt))
     val cents = KMeans.lloyd(spark, e, KMeans.hashSeeds(e, k), iters = 3)
-    val c = KMeans.assign(e, KMeans.centDf(spark, cents)).persist()
+    val c = graft.Lineage.cut(KMeans.assign(e, KMeans.centDf(spark, cents)))
     // unit centroids → per-cell max member angle α + cell size (one
     // O(cells) collect, the only driver-side state besides centroids)
     val unit: Map[Int, Array[Double]] = cents.zipWithIndex.map { case (v, i) =>
@@ -1433,12 +1438,9 @@ object Dedup {
         (arrayDot(col("embedding"), col("cvec")) / col("nrm")).as("cc"))
       .groupBy("cluster").agg(min(col("cc")).as("min_cc"), count(lit(1)).as("sz"))
       .collect().map(r => r.getInt(0) -> ((r.getDouble(1), r.getLong(2)))).toMap
-    // e is fully consumed by the collects above (c is materialized and
-    // persisted); drop it so repeated calls don't stack cache entries.
-    // The caller's verify joins re-scan the narrow source once — cheap
-    // next to the candidate join. c itself stays cached until evicted:
-    // it feeds the lazily-consumed result, so there is no safe point
-    // to unpersist it here.
+    // e is fully consumed by the collects above (c is cut); the
+    // caller's verify joins re-scan the narrow source once — cheap
+    // next to the candidate join
     e.unpersist()
     val minCc = cellStats.map { case (cell, (cc, _)) => cell -> cc }
     // Skew guard: k-means puts a planted mega-cluster (60% of a
@@ -1670,7 +1672,7 @@ object Dedup {
     // cell population stays ~constant as the corpus grows
     val k = math.max(1, math.min(256, (n / 8).toInt))
     val cents = KMeans.lloyd(spark, e, KMeans.hashSeeds(e, k), iters = 3)
-    val assigned = KMeans.assign(e, KMeans.centDf(spark, cents)).persist()
+    val assigned = graft.Lineage.cut(KMeans.assign(e, KMeans.centDf(spark, cents)))
     e.unpersist()
     val unitDf = cents.zipWithIndex.map { case (v, i) =>
       val nn = math.sqrt(v.map(x => x * x).sum)

@@ -27,17 +27,14 @@ object Insights {
     * integers (products < 2^63 up to ~10⁹ users): deterministic.
     */
   def cooccurLift(spark: SparkSession, dir: String): DataFrame = {
-    val ut = Tables.events(spark, dir)
-      .select(col("user_id"), col("event_type")).distinct().persist()
+    val ut = graft.Memo("cooccurUsers", spark, dir, "events")(
+      Tables.events(spark, dir).select(col("user_id"), col("event_type")).distinct())
     val nUsers = ut.select(col("user_id")).distinct().count()
     val marg = ut.groupBy(col("event_type")).agg(count(lit(1)).as("n"))
     val pairs = ut.as("a").join(ut.as("b"), "user_id")
       .filter(col("a.event_type") < col("b.event_type"))
       .groupBy(col("a.event_type").as("type_a"), col("b.event_type").as("type_b"))
       .agg(count(lit(1)).as("n_ab"))
-    // ut stays cached for the caller's action (an eager unpersist here
-    // would force the distinct to recompute); it is tiny (users ×
-    // |type vocabulary|) and LRU-evicted
     pairs
       .join(broadcast(marg.select(col("event_type").as("type_a"), col("n").as("n_a"))), "type_a")
       .join(broadcast(marg.select(col("event_type").as("type_b"), col("n").as("n_b"))), "type_b")

@@ -163,21 +163,18 @@ object Similarity {
       // literals: the plan is O(1) in K (the old K-struct-literal
       // expression tree blew up codegen at production K ≈ √n). The
       // Lloyd collects are O(K·dim), bounded regardless of corpus
-      // size. See KMeans for the assignment shape. Centroids are pure
-      // data from deterministic seeds — memoized per (dir, params)
-      // like the PQ codebooks (r18), so repeated queries skip the
-      // seed collect + Lloyd action chain.
-      val centroids = ivfCentCache.computeIfAbsent(
-        s"${Tables.contentKey(spark, dir, "embeddings")}|$numClusters|$lloydIters", _ => {
-          val n = e.count()
-          // deterministic seeding: evenly-strided vec_ids
-          val stride = math.max(1L, n / numClusters)
-          val seeds: Array[Seq[Double]] = e
-            .filter(col("vec_id") % stride === 0).orderBy("vec_id").limit(numClusters)
-            .select(expr("transform(embedding, x -> CAST(x AS DOUBLE))")).collect()
-            .map(_.getSeq[Double](0))
-          KMeans.lloyd(spark, e, seeds, lloydIters)
-        })
+      // size. See KMeans for the assignment shape.
+      val centroids = graft.Memo.value("ivfCent", spark, dir, "embeddings",
+          numClusters, lloydIters) {
+        val n = e.count()
+        // deterministic seeding: evenly-strided vec_ids
+        val stride = math.max(1L, n / numClusters)
+        val seeds: Array[Seq[Double]] = e
+          .filter(col("vec_id") % stride === 0).orderBy("vec_id").limit(numClusters)
+          .select(expr("transform(embedding, x -> CAST(x AS DOUBLE))")).collect()
+          .map(_.getSeq[Double](0))
+        KMeans.lloyd(spark, e, seeds, lloydIters)
+      }
       val index = KMeans.assign(e, KMeans.centDf(spark, centroids))
       // nprobe nearest clusters per query, via the same broadcast
       // centroid relation: per-(query, cluster) distance → window
@@ -332,9 +329,6 @@ object Similarity {
       .orderBy("vec_id")
   }
 
-  private val pqBookCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Array[Array[Seq[Double]]]]()
-
   /** The PQ internals — (embeddings, codebook (sub, cluster, cent,
     * cnorm2), assignment (vec_id, sub, code, sq)) — exposed for the
     * ADC-recall spec.
@@ -343,39 +337,36 @@ object Similarity {
       m: Int, ksub: Int, iters: Int): (DataFrame, DataFrame, DataFrame) =
     pqPartsFor(spark,
       Tables.embeddings(spark, dir).select(col("vec_id"), col("label"), col("embedding")),
-      m, ksub, iters, memoKey = Some(Tables.contentKey(spark, dir, "embeddings")))
+      m, ksub, iters,
+      books => graft.Memo.value("pqBook", spark, dir, "embeddings", m, ksub, iters)(books))
 
+  /** `keepBooks` receives the codebook training unevaluated: a public
+    * entry memoizes it per corpus; the default trains on every call.
+    */
   private[graft] def pqPartsFor(spark: SparkSession, e: DataFrame,
       m: Int, ksub: Int, iters: Int,
-      memoKey: Option[String]): (DataFrame, DataFrame, DataFrame) = {
+      keepBooks: (=> Array[Array[Seq[Double]]]) => Array[Array[Seq[Double]]] = books => books)
+      : (DataFrame, DataFrame, DataFrame) = {
     val subs = e.select(col("vec_id"), posexplode(expr(
         s"transform(sequence(0, ${m - 1}), mm -> slice(embedding, mm * (size(embedding) div $m) + 1, size(embedding) div $m))"))
         .as(Seq("sub", "sv")))
       .withColumn("snrm", arrayNorm(col("sv")))
-      // cache() dedupes by analyzed plan, so repeated calls on the
-      // same dir share ONE cache entry (m × n tiny subvector rows)
-      .cache()
-    // Codebooks train on a deterministic 25% content-hash sample —
-    // standard PQ practice (codebooks need ~1e5-1e6 points, not the
-    // corpus), and it keeps the m × iters Lloyd jobs off corpus-width
-    // partitioning: the sample is coalesced to its own size, so each
-    // tiny iteration job doesn't pay full-scan task scheduling.
-    // Only the single assignment pass below touches every vector.
-    val sample = subs
-      .filter(pmod(xxhash64(col("vec_id")), lit(4)) === 0)
-      .coalesce(4).cache()
-    // Codebook centroids are pure data — memoized per (dir, params)
-    // like the supervised HMM model: train once per process, not once
-    // per query invocation.
-    def train(): Array[Array[Seq[Double]]] =
-      (0 until m).map { mm =>
+    val cents = keepBooks {
+      // Codebooks train on a deterministic 25% content-hash sample —
+      // standard PQ practice (codebooks need ~1e5-1e6 points, not the
+      // corpus), and it keeps the m × iters Lloyd jobs off corpus-width
+      // partitioning: the sample is coalesced to its own size, so each
+      // tiny iteration job doesn't pay full-scan task scheduling.
+      // Only the single assignment pass below touches every vector.
+      val sample = subs
+        .filter(pmod(xxhash64(col("vec_id")), lit(4)) === 0)
+        .coalesce(4).cache()
+      try (0 until m).map { mm =>
         val se = sample.filter(col("sub") === mm)
           .select(col("vec_id"), col("sv").as("embedding"), col("snrm").as("nrm"))
         KMeans.lloyd(spark, se, KMeans.hashSeeds(se, ksub), iters)
       }.toArray
-    val cents = memoKey match {
-      case Some(key) => pqBookCache.computeIfAbsent(s"$key|$m|$ksub|$iters", _ => train())
-      case None      => train()
+      finally sample.unpersist()
     }
     val codebook = (0 until m).map { mm =>
       KMeans.centDf(spark, cents(mm)).withColumn("sub", lit(mm))
@@ -451,11 +442,11 @@ object Similarity {
     knnIvfPqFor(spark,
       Tables.embeddings(spark, dir)
         .select(col("vec_id"), col("embedding"), arrayNorm(col("embedding")).as("nrm")),
-      kCoarse, nprobe, k, memoKey = Some(Tables.contentKey(spark, dir, "embeddings")))
+      kCoarse, nprobe, k, corpus = Some(dir))
 
   private[graft] def knnIvfPqFor(spark: SparkSession, e: DataFrame,
-      kCoarse: Int, nprobe: Int, k: Int, memoKey: Option[String]): DataFrame = {
-    val (centDf, codebook, codesWithCell) = ivfPqIndexRelations(spark, e, kCoarse, memoKey)
+      kCoarse: Int, nprobe: Int, k: Int, corpus: Option[String]): DataFrame = {
+    val (centDf, codebook, codesWithCell) = ivfPqIndexRelations(spark, e, kCoarse, corpus)
     ivfPqProbe(e, centDf, codebook, codesWithCell, nprobe, k)
   }
 
@@ -463,15 +454,14 @@ object Similarity {
     * (cluster, cent, cnorm2), residual codebook (sub, cluster, cent,
     * cnorm2) and the coded corpus (vec_id, cell, sub, code) — split
     * out so [[annIndexPersist]] can round-trip them through parquet
-    * and probe the read-back copies.
+    * and probe the read-back copies. With a `corpus` dir, the coarse
+    * centroids and the residual codebook are memoized per corpus.
     */
   private[graft] def ivfPqIndexRelations(spark: SparkSession, e: DataFrame,
-      kCoarse: Int, memoKey: Option[String]): (DataFrame, DataFrame, DataFrame) = {
-    def trainCoarse() = KMeans.lloyd(spark, e, KMeans.hashSeeds(e, kCoarse), iters = 3)
-    val cents = memoKey match {
-      case Some(key) => ivfPqCoarseCache.computeIfAbsent(s"$key|$kCoarse", _ => trainCoarse())
-      case None      => trainCoarse()
-    }
+      kCoarse: Int, corpus: Option[String]): (DataFrame, DataFrame, DataFrame) = {
+    def kept[T](name: String)(build: => T): T =
+      corpus.fold(build)(dir => graft.Memo.value(name, spark, dir, "embeddings", kCoarse)(build))
+    val cents = kept("ivfPqCoarse")(KMeans.lloyd(spark, e, KMeans.hashSeeds(e, kCoarse), iters = 3))
     val centDf = KMeans.centDf(spark, cents)
     val assigned = KMeans.assign(e, centDf)
     // residual relation: vector minus its coarse centroid
@@ -480,7 +470,7 @@ object Similarity {
         zip_with(col("embedding"), col("cent"), (a, b) => (a - b).cast("float")).as("embedding"))
     val (_, codebook, codes) = pqPartsFor(spark,
       resid.select(col("vec_id"), col("embedding")),
-      m = 4, ksub = 16, iters = 3, memoKey = memoKey.map(key => s"$key|ivfres$kCoarse"))
+      m = 4, ksub = 16, iters = 3, keepBooks = books => kept("ivfPqBook")(books))
     val codesWithCell = codes.join(resid.select(col("vec_id"), col("cell")), "vec_id")
       .select(col("vec_id"), col("cell"), col("sub"), col("code"))
     (centDf, codebook, codesWithCell)
@@ -541,7 +531,7 @@ object Similarity {
       .select(col("vec_id"), col("embedding"), arrayNorm(col("embedding")).as("nrm"))
       .filter(col("nrm") > 0)
     val (centDf, codebook, codesWithCell) =
-      ivfPqIndexRelations(spark, e, kCoarse, memoKey = Some(Tables.contentKey(spark, dir, "embeddings")))
+      ivfPqIndexRelations(spark, e, kCoarse, corpus = Some(dir))
     // scratch path keyed by (corpus dir, SESSION, pid) and reused
     // across calls — the Sketches.hllCube discipline (no orphan dir
     // per invocation, no cross-session overwrite-then-read race)
@@ -561,17 +551,6 @@ object Similarity {
   private[graft] def annIndexScratchDir(spark: SparkSession, dir: String): String =
     graft.ScratchDir("graft_ann_idx", spark, dir)
 
-  private val ivfPqCoarseCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Array[Seq[Double]]]()
-
-  // r18: knn_ivf / kmeans_clusters centroid memos (same contract as
-  // ivfPqCoarseCache — centroids are pure data from deterministic
-  // seeds, keyed by (dir, params))
-  private val ivfCentCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Array[Seq[Double]]]()
-  private val kmCentCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Array[Seq[Double]]]()
-
   /** User-facing k-means clustering report: per-cluster size and
     * inertia from the shared deterministic Lloyd machinery (hash
     * seeds, broadcast-relation assignment). The spec checks the
@@ -587,9 +566,8 @@ object Similarity {
       k: Int = 8, iters: Int = 3): DataFrame = {
     val e = Tables.embeddings(spark, dir)
       .select(col("vec_id"), col("embedding"), arrayNorm(col("embedding")).as("nrm"))
-    val cents = kmCentCache.computeIfAbsent(
-      s"${Tables.contentKey(spark, dir, "embeddings")}|$k|$iters",
-      _ => KMeans.lloyd(spark, e, KMeans.hashSeeds(e, k), iters))
+    val cents = graft.Memo.value("kmCent", spark, dir, "embeddings", k, iters)(
+      KMeans.lloyd(spark, e, KMeans.hashSeeds(e, k), iters))
     KMeans.assign(e, KMeans.centDf(spark, cents))
       .join(broadcast(KMeans.centDf(spark, cents)), "cluster")
       .withColumn("d",

@@ -17,8 +17,10 @@ object Tables {
   def table(spark: SparkSession, dir: String, name: String): DataFrame =
     spark.read.parquet(s"$dir/$name.parquet")
 
-  /** Cache key for everything derived from a table (Lloyd centroids,
-    * PQ codebooks, BPE merge tables, every [[graft.Memo]] entry): `dir`
+  /** Cache key for everything derived from a table, read only by
+    * [[graft.Memo]] (its frames, and its pure-data values: Lloyd
+    * centroids, PQ codebooks, BPE merge tables, trained models,
+    * Sequencer's vocabulary and sequences): `dir`
     * plus a cheap content signature — a 64-bit hash of (leaf name,
     * length, mtime) per backing file, folded in name order. Corpora
     * HAVE been regenerated in place mid-JVM (round 8, CLAUDE.md); with

@@ -5,13 +5,13 @@ import org.apache.spark.sql.SparkSession
 /** One shared local session for all Spark-backed specs. */
 object LocalSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // the mains' session setup under a pinned environment, so the specs
+    // see one layout whatever the host or the caller's GRAFT_CONF
+    val builder = SparkSession.builder().appName("graft-test")
+    LocalSession.settings(Map("SPARK_GRAFT_CPUS" -> "4")).foreach { case (k, v) =>
+      builder.config(k, v)
+    }
+    val s = builder.getOrCreate()
     // snapshot hygiene keys before ANY spec can touch the conf: every
     // conf access goes through spark.conf, which forces this initializer
     // first, so the snapshot can never baseline already-polluted values

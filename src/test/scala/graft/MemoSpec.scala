@@ -77,17 +77,26 @@ class MemoSpec extends AnyFunSuite {
     val dir = Files.createTempDirectory("graft_memo_conc").toString
     writeCorpus(dir, 5, Nil, seed = 4)
     val builds = new java.util.concurrent.atomic.AtomicInteger()
+    val valueBuilds = new java.util.concurrent.atomic.AtomicInteger()
     val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
+    def concurrently[T](call: => T): Seq[T] = (1 to 4).map(_ => pool.submit(() => call)).map(_.get())
     try {
-      val calls = (1 to 4).map(_ => pool.submit(() => Memo("spec.concurrent", spark, dir, "documents") {
+      val outs = concurrently(Memo("spec.concurrent", spark, dir, "documents") {
         builds.incrementAndGet()
         Thread.sleep(200)
         spark.range(10).toDF("v")
-      }))
-      val outs = calls.map(_.get())
+      })
       assert(builds.get == 1, s"${builds.get} builds ran for one key")
       assert(outs.forall(_ eq outs.head), "callers got different entries for one key")
       assert(outs.head.collect().map(_.getLong(0)).toSeq == (0L until 10L))
+      // the pure-data scope shares the key and the single build
+      val values = concurrently(Memo.value("spec.concurrentValue", spark, dir, "documents", 3) {
+        valueBuilds.incrementAndGet()
+        Thread.sleep(200)
+        Array(1.0, 2.0, 3.0)
+      })
+      assert(valueBuilds.get == 1, s"${valueBuilds.get} value builds ran for one key")
+      assert(values.forall(_ eq values.head), "callers got different values for one key")
     } finally pool.shutdown()
   }
 }

@@ -82,11 +82,12 @@ class PlanAuditSpec extends AnyFunSuite {
     val names = SparkEntry.queries.keys.toSeq.filterNot(skip).sorted
     // cache-warm canonical state: constructing a query's DataFrame
     // builds its memo entries (graft.Memo: lineage cuts, read as
-    // LogicalRDD scans) and registers the remaining persisted relations
-    // (sequences, loop intermediates) with the shared CacheManager,
-    // which rewrites later plans to InMemoryTableScan. One warm-up
-    // construction pass makes the fingerprints independent of which
-    // suites ran before this one.
+    // LogicalRDD scans, and pure-data values such as centroids) and
+    // registers Sequencer's persisted sequences, the one relation a
+    // library call leaves in the shared CacheManager, which rewrites
+    // later plans to InMemoryTableScan. One warm-up construction pass
+    // makes the fingerprints independent of which suites ran before
+    // this one.
     names.foreach(n => SparkEntry.queries(n)(spark, dir))
     // pre-cut build plans (r19): queries whose entry fingerprint is a
     // single LogicalRDD get their un-cut build shape audited under a

@@ -51,7 +51,7 @@ class DeterministicTrainingSpec extends AnyFunSuite {
     val docs = graft.sources.Tables.documents(spark, LocalSpark.sfDir)
     val outs = Seq(1, 7).map { p =>
       graft.operators.Classifier
-        .qualityLrFor(docs.repartition(p), memoKey = None)
+        .qualityLrFor(docs.repartition(p))
         .collect().map(_.toSeq).toSeq
     }
     assert(outs(0) == outs(1))

@@ -51,7 +51,7 @@ class AnnIndexSpec extends AnyFunSuite {
     Similarity.annIndexPersist(spark, dir).collect() // ensure written
     val idxDir = Similarity.annIndexScratchDir(spark, dir)
     val (centDf, codebook, codes) =
-      Similarity.ivfPqIndexRelations(spark, e, kCoarse = 8, memoKey = Some(dir))
+      Similarity.ivfPqIndexRelations(spark, e, kCoarse = 8, corpus = Some(dir))
     def canon(df: org.apache.spark.sql.DataFrame): Seq[String] =
       df.collect().map(_.toString).sorted.toSeq
     assert(canon(spark.read.parquet(s"$idxDir/coarse.parquet")) === canon(centDf))

@@ -13,7 +13,7 @@ class ClassifierSpec extends AnyFunSuite {
     val r2 = Classifier.train(feats)
     // treeAggregate's combine order is not FP-deterministic across
     // runs (same as Baum-Welch): stable to ~1e-9, not bitwise; the
-    // driver query memoizes one model per process so OUTPUT is stable
+    // driver query memoizes one model per (session, corpus) so OUTPUT is stable
     r1.weights.zip(r2.weights).foreach { case (a, b) =>
       assert(math.abs(a - b) < 1e-9, s"weights diverged: $a vs $b")
     }
@@ -43,7 +43,7 @@ class ClassifierSpec extends AnyFunSuite {
       (i.toLong, Seq.fill(50)("spam spam").mkString(" "))) // repetitive
     val short = (40 until 50).map(i => (i.toLong, "tiny doc"))
     val docs = (good ++ bad ++ short).toDF("doc_id", "text")
-    val rows = Classifier.qualityLrFor(docs, memoKey = None).collect()
+    val rows = Classifier.qualityLrFor(docs).collect()
       .map(r => r.getLong(0) -> r.getDouble(1)).toMap
     val gAvg = good.map(d => rows(d._1)).sum / good.size
     val bAvg = (bad ++ short).map(d => rows(d._1)).sum / (bad.size + short.size)

@@ -391,7 +391,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
         .sortBy(id => (d2(vecs(q), vecs(id)), id)).take(5).toSet
     }.toMap
     def run(np: Int): Seq[(Long, Long)] =
-      Similarity.knnIvfPqFor(spark, raw, kCoarse = 32, nprobe = np, k = 5, memoKey = None)
+      Similarity.knnIvfPqFor(spark, raw, kCoarse = 32, nprobe = np, k = 5, corpus = None)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     val curve = Seq(1, 2, 4, 8, 32).map { np =>
       val got = run(np).groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
@@ -442,7 +442,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
     }
     val e = rows.toDF("vec_id", "label", "embedding")
     val (_, codebook, assigned) =
-      Similarity.pqPartsFor(spark, e, m = 4, ksub = 16, iters = 3, memoKey = None)
+      Similarity.pqPartsFor(spark, e, m = 4, ksub = 16, iters = 3)
     val codes = assigned.collect()
       .map(r => (r.getLong(0), r.getInt(1)) -> r.getInt(2)).toMap
     val book = codebook.collect().map { r =>
@@ -476,7 +476,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
     // the DISTRIBUTED ADC operator must agree: queries are ids < 10
     // (cluster 0), whose true top-9 are the other cluster-0 members
     val (_, codebook2, assigned2) =
-      Similarity.pqPartsFor(spark, e, m = 4, ksub = 16, iters = 3, memoKey = None)
+      Similarity.pqPartsFor(spark, e, m = 4, ksub = 16, iters = 3)
     val op = Similarity.knnPqFrom(e, codebook2, assigned2, m = 4, k = perCluster - 1)
       .collect().map(r => (r.getLong(0), r.getLong(1))).groupBy(_._1)
     val cluster0 = (0 until perCluster).map(_.toLong).toSet
@@ -491,7 +491,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
     val raw = e.withColumn("nrm", graft.functions.arrayNorm(
       org.apache.spark.sql.functions.col("embedding")))
     val ivfpq = Similarity.knnIvfPqFor(spark, raw,
-      kCoarse = 8, nprobe = 1, k = perCluster - 1, memoKey = None)
+      kCoarse = 8, nprobe = 1, k = perCluster - 1, corpus = None)
       .collect().map(r => (r.getLong(0), r.getLong(1))).groupBy(_._1)
     (0 until perCluster).map(_.toLong).foreach { q =>
       val neigh = ivfpq(q).map(_._2).toSet

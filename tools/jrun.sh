@@ -1,9 +1,11 @@
 #!/usr/bin/env bash
 # Run a graft main class directly on the compiled classes, bypassing
-# sbt (same fork flags as build.sbt). Lets a long scaled-tier Verify
-# run in the background while sbt stays free for other gates.
+# sbt (the JVM flags of build.sbt's forked runs; graft.LocalSession sets
+# the session confs). Lets a long scaled-tier Verify run in the
+# background while sbt stays free for other gates.
 # Usage: SPARK_DRIVER_MEM=48g SPARK_GRAFT_CPUS=24 tools/jrun.sh graft.Verify <args...>
-# Requires a prior `sbt compile` (classes + resources under target/).
+# Requires a prior `sbt compile` (classes under target/); resources are
+# read from src/main/resources.
 set -euo pipefail
 cd "$(dirname "$0")/.."
 CLASSES="${GRAFT_CLASSES:-target/scala-2.13/classes}"
@@ -17,7 +19,5 @@ done
 GC=""
 [ -n "${GRAFT_GC_LOG:-}" ] && GC="-Xlog:gc:${GRAFT_GC_LOG}"
 exec java $ADD_OPENS $GC \
-  -Dspark.ui.enabled=false \
-  -Dspark.sql.session.timeZone=UTC \
   "-Xmx${SPARK_DRIVER_MEM:-8g}" \
-  -cp "$CLASSES:/opt/spark/jars/*" "$@"
+  -cp "$CLASSES:src/main/resources:/opt/spark/jars/*" "$@"
